@@ -1,0 +1,32 @@
+package perfbench
+
+/** Minimal JSON writer for the result line and the side files. */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
+  }
+
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => s"${str(k.toString)}: ${apply(x)}" }.mkString("{", ", ", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ", ", "]")
+    case other => str(other.toString)
+  }
+}
