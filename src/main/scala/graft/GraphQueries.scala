@@ -93,25 +93,17 @@ object GraphQueries {
     TestGraph.store(spark, dir).metadata
       .select(col("graph_id"), col("source_id"), col("state"), col("count"), col("updated_at"))
 
-  /** A4 — count2 estimate formulas between vertices 1 and 2, per graph. All leaf
-    * cardinalities come from ONE pass over the metadata aggregate (the reference reads
+  /** A4 — count2 estimates of the intersection, union and difference of vertices 1
+    * and 2, per graph: ONE `FlockService.count2` batch, so every leaf cardinality is a
+    * metadata row of the store restricted to those vertices (the reference reads
     * materialized per-vertex counts, never edge rows — `SimpleQuery.scala:24-27`).
     */
   def count2Estimates(spark: SparkSession, dir: String): DataFrame = {
-    val store = TestGraph.store(spark, dir)
-    val config = GraftConfig()
-    // metadata count reads 0 unless the vertex's dominant state is the requested (Normal)
-    val counts = store.metadata
-      .filter(col("source_id").isin(1L, 2L) && col("state") === State.Normal)
-      .select(col("graph_id"), col("source_id"), col("count"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val rows = (1 to 3).map { g =>
-      val c1 = counts.getOrElse((g, 1L), 0L)
-      val c2 = counts.getOrElse((g, 2L), 0L)
-      Row(g, (math.min(c1, c2) * config.averageIntersectionProportion).toLong, math.max(c1, c2), c1)
-    }
+    val graphs = 1 to 3
+    val estimates = new FlockService(TestGraph.store(spark, dir)).count2(
+      for (g <- graphs; op <- Seq(IntersectionOp, UnionOp, DifferenceOp))
+        yield Seq(TermOp(QueryTerm(1L, g)), TermOp(QueryTerm(2L, g)), op))
+    val rows = graphs.zip(estimates.grouped(3)).map { case (g, est) => Row(g +: est: _*) }
     val schema = StructType(Seq(
       StructField("graph_id", IntegerType, nullable = false),
       StructField("est_intersection", LongType, nullable = false),

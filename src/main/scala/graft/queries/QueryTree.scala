@@ -115,69 +115,34 @@ sealed trait QueryNode {
 
 object QueryNode {
 
-  /** (graphId, vertexId, isForward) -> (dominant vertex state, count in that state). */
+  /** (graphId, vertexId, isForward) -> (vertex state, count in that state), as
+    * [[graft.store.EdgeStore.metadata]] derives them.
+    */
   type LeafStats = Map[(Int, Long, Boolean), (Int, Long)]
 
-  /** Vertex cardinalities for ALL wildcard leaves of a program batch in ONE Spark job
+  /** Vertex cardinalities for ALL wildcard leaves of a program batch in ONE collect
     * (the reference reads materialized per-vertex counts, never edge rows —
     * `SimpleQuery.scala:24-27`; a count2 batch of N compound queries must not issue
-    * O(N·leaves) driver round-trips). The wanted (graph, vertex, direction) keys are
-    * broadcast against the snapshot; per-key per-state counts aggregate map-side.
+    * O(N·leaves) driver round-trips). Per queried direction, the store
+    * [[graft.store.EdgeStore.restrictedTo]] that direction's keys derives its
+    * [[graft.store.EdgeStore.metadata]] rows — the same (state, count) rule
+    * `get_metadata` reads — so the batch folds only its own vertices' log rows; one
+    * collect returns them all.
     */
-  def leafStats(store: EdgeStore, terms: Seq[QueryTerm]): LeafStats = {
-    val want = terms.filter(_.destinationIds.isEmpty)
+  def leafStats(store: EdgeStore, terms: Seq[QueryTerm]): LeafStats =
+    terms.filter(_.destinationIds.isEmpty)
       .map(t => (t.graphId, t.sourceId, t.isForward))
       .distinct
-    if (want.isEmpty) return Map.empty
-    val spark = store.log.sparkSession
-    import spark.implicits._
-
-    val snap = store.snapshot
-    // only project the directions actually queried (each side re-aggregates the snapshot)
-    val sides = Seq(true, false).filter(f => want.exists(_._3 == f)).map { f =>
-      val vcol = if (f) "source_id" else "destination_id"
-      snap.select(
-        col("graph_id"), col(vcol).as("vertex_id"), lit(f).as("is_fwd"),
-        col("state"), col("updated_at")
-      )
-    }
-    val wantDF = broadcast(want.toDF("graph_id", "vertex_id", "is_fwd"))
-    val rows = sides.reduce(_ unionByName _)
-      .join(wantDF, Seq("graph_id", "vertex_id", "is_fwd"))
-      .groupBy(col("graph_id"), col("vertex_id"), col("is_fwd"), col("state"))
-      .agg(count(lit(1)).as("c"), max(col("updated_at")).as("mu"))
-      .collect()
-
-    // first-class vertex registers override the derived state (reference: the count
-    // read is `metadata.state` + its count — `SqlShard.scala:175-188` — and edge
-    // writes never change the register); one extra tiny job, only when registers exist
-    val registers: Map[(Int, Long, Boolean), Int] = store.vertexLog match {
-      case None => Map.empty
-      case Some(_) =>
-        store.vertexStates
-          .join(
-            wantDF.select(col("graph_id"), col("vertex_id"), col("is_fwd").as("is_forward")),
-            Seq("graph_id", "vertex_id", "is_forward"))
-          .select(col("graph_id"), col("vertex_id"), col("is_forward"), col("state"))
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2)) -> r.getInt(3))
-          .toMap
-    }
-
-    val perKey = rows.groupBy(r => (r.getInt(0), r.getLong(1), r.getBoolean(2)))
-    val derived = perKey.view.mapValues { perState =>
-      // vertex state = LWW over the vertex's edge writes: max (updatedAt, priority)
-      val dominant = perState.maxBy(r => (r.getInt(5), State.priority(r.getInt(3))))
-      (dominant.getInt(3), dominant.getLong(4))
-    }.toMap
-    val registered = registers.map { case (key, regState) =>
-      val countInRegState = perKey.getOrElse(key, Array.empty)
-        .collectFirst { case r if r.getInt(3) == regState => r.getLong(4) }
-        .getOrElse(0L)
-      key -> (regState, countInRegState)
-    }
-    derived ++ registered
-  }
+      .groupBy(_._3)
+      .map { case (isForward, keys) =>
+        store.restrictedTo(keys).metadata(isForward)
+          .select(col("graph_id"), col("source_id"), lit(isForward).as("is_forward"),
+            col("state"), col("count"))
+      }
+      .reduceOption(_ unionByName _)
+      .fold(Map.empty: LeafStats)(_.collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2)) -> (r.getInt(3), r.getLong(4)))
+        .toMap)
 }
 
 final case class SimpleNode(term: QueryTerm)                        extends QueryNode

@@ -22,17 +22,17 @@ final class FlockService(val store: EdgeStore, val config: GraftConfig = GraftCo
   def get(sourceId: Long, graphId: Int, destinationId: Long): Option[Edge] =
     store.get(graphId, sourceId, destinationId)
 
-  /** Point metadata read (reference `get_metadata`): derives metadata for ONLY the
-    * requested (graph, vertex) via the key-pruned store view — `metadata` then
-    * returns at most that vertex's row, with the point predicates pushed into both
-    * log scans ([[graft.store.EdgeStore.whereVertex]] scaladoc; filtering the
-    * derived table instead would fold every graph's metadata per RPC, because the
-    * register branch's full-outer join blocks predicate pushdown).
+  /** Point metadata read (reference `get_metadata`): the forward
+    * [[graft.store.EdgeStore.metadata]] row of the store restricted to this one
+    * (graph, vertex) key — the same (state, count) rule `count2` estimates read, with
+    * the point predicates on both log scans ([[graft.store.EdgeStore.restrictedTo]];
+    * filtering the derived table instead would fold the whole store per RPC, because
+    * the register branch's full-outer join blocks predicate pushdown).
     */
   def getMetadata(sourceId: Long, graphId: Int): Option[Metadata] = {
     val spark = store.log.sparkSession
     import spark.implicits._
-    store.whereVertex(graphId, sourceId).metadata
+    store.restrictedTo(Seq((graphId, sourceId, true))).metadata
       .select(
         col("graph_id").as("graphId"),
         col("source_id").as("sourceId"),
@@ -92,9 +92,10 @@ final class FlockService(val store: EdgeStore, val config: GraftConfig = GraftCo
 
   /** Cardinalities (reference `count2`): documented estimates by default, exact behind
     * the flag (SURVEY.md §2.5 A4 recommends exact for oracle comparisons). The estimate
-    * path gathers every leaf of every program and runs ONE metadata job for the whole
-    * batch (`QueryNode.leafStats`), then combines estimates driver-side — a batch of N
-    * compound queries is one Spark job, not O(N·leaves).
+    * path gathers every leaf of every program and reads their metadata rows in ONE
+    * collect over the store restricted to those vertices (`QueryNode.leafStats`), then
+    * combines estimates driver-side — a batch of N compound queries is one action that
+    * folds only its own vertices, not O(N·leaves) actions over the store.
     */
   def count2(programs: Seq[Seq[SelectOperation]], exact: Boolean = false): Seq[Long] = {
     val nodes = programs.map(compile)
@@ -122,21 +123,7 @@ final class FlockService(val store: EdgeStore, val config: GraftConfig = GraftCo
     * (`Flockdb.thrift:158-160`: compound queries unsupported there).
     */
   def selectEdges(term: QueryTerm, page: Page): PagedResult[Edge] = {
-    val (vertexCol, _) =
-      if (term.isForward) ("source_id", "destination_id") else ("destination_id", "source_id")
-    var df = store.snapshot
-      .filter(col("graph_id") === term.graphId && col(vertexCol) === term.sourceId)
-      .filter(col("state").isin(term.effectiveStates: _*))
-    term.destinationIds.foreach { ids =>
-      val other = if (term.isForward) "destination_id" else "source_id"
-      if (ids.size <= EdgeStore.WhereInPredicateMax) df = df.filter(col(other).isin(ids: _*))
-      else {
-        val spark = store.log.sparkSession
-        import spark.implicits._
-        df = df.join(broadcast(ids.toDF(other)), Seq(other), "left_semi")
-      }
-    }
-    val paged = Pagination.paginateRows(df, "position", page)
+    val paged = Pagination.paginateRows(store.termEdges(term), "position", page)
     PagedResult(paged.items.map(rowToEdge), paged.nextCursor, paged.prevCursor)
   }
 

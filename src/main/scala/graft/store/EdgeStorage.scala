@@ -28,7 +28,10 @@ object EdgeStorage {
     */
   def save(df: DataFrame, path: String, buckets: Int = 32): Unit =
     df.repartition(buckets, col("source_id"))
-      .sortWithinPartitions(col("source_id"), col("state"), col("position"))
+      // graph_id leads: the partitioned writer needs each task's rows sorted by it, and
+      // an in-partition sort that does not start with it is replaced by a graph_id-only
+      // sort, losing the source_id order the row-group stats prune on
+      .sortWithinPartitions(col("graph_id"), col("source_id"), col("state"), col("position"))
       .write
       .mode(SaveMode.Overwrite)
       .partitionBy("graph_id")

@@ -24,6 +24,12 @@ import graft.model._
   * writes before the shuffle; AQE handles skewed vertices). The vertex-register table is
   * per-vertex (orders of magnitude smaller than edges), so the write-path domination joins
   * against it broadcast under AQE.
+  *
+  * One rule, one restriction: per-vertex (state, count) comes only from [[metadata]]
+  * (both directions), and every point- or batch-scale read of derived state — a
+  * `get_metadata`, a `count2` batch's leaf stats, an `execute` batch's pre-write state,
+  * a metadata patch — folds the logs [[restrictedTo]] its own vertex keys, never the
+  * whole store.
   */
 final class EdgeStore(
     val log: DataFrame,
@@ -145,7 +151,14 @@ final class EdgeStore(
     */
   def vertexStates: DataFrame = vertexLww(vertexLogOrEmpty)
 
-  /** Per-vertex metadata: vertex state + count of edges in that state.
+  /** Forward per-vertex metadata: [[metadata(isForward:Boolean)* metadata(true)]]. */
+  def metadata: DataFrame = metadata(isForward = true)
+
+  /** Per-vertex metadata: vertex state + count of edges in that state — the ONE
+    * (state, count) rule of the engine. `get_metadata`, `count2`'s simple-term
+    * estimates and incremental maintenance all read it, as the reference answers
+    * `get_metadata` and `count2` from the same metadata row (`SqlShard.scala:146-152`,
+    * `SimpleQuery.scala:24-27`).
     *
     * State rule (reference semantics): when the vertex has a first-class register
     * (written by a wildcard op / metadata write), the register IS the vertex state —
@@ -155,17 +168,21 @@ final class EdgeStore(
     * edges at all. Vertices without a register fall back to the derived dominant state
     * (LWW-newest edge write projected to the vertex), which is what the reference's
     * lazy `populateMetadata` + repair path converge to.
+    *
+    * `isForward = false` derives the backward direction: the vertex is the edges'
+    * destination and its register the backward one. The vertex is still reported as
+    * `source_id`, the way `QueryTerm.sourceId` names a backward term's vertex (the
+    * reference keeps the backward direction as graph -graphId with the columns
+    * swapped, `ForwardingManager.scala:35-37`).
     */
-  def metadata: DataFrame = {
-    val snap = snapshot
-    val derived = snap
-      .groupBy(col("graph_id"), col("source_id"))
+  def metadata(isForward: Boolean): DataFrame = {
+    val derived = snapshot
+      .groupBy(col("graph_id"), col(if (isForward) "source_id" else "destination_id").as("source_id"))
       .agg(
         // LwwWinner (not max_by) keeps this in ObjectHashAggregate — see lwwMerge
         org.apache.spark.sql.graft.LwwWinner
           .column(lit(0L), col("updated_at"), lit(0), col("state"))
           .as("m"),
-        count(lit(1)).as("total"),
         // counts per state, map-side combined; we pick the vertex state's one below
         sum(when(col("state") === State.Normal, 1L).otherwise(0L)).as("c0"),
         sum(when(col("state") === State.Removed, 1L).otherwise(0L)).as("c1"),
@@ -190,7 +207,7 @@ final class EdgeStore(
         )
       case Some(_) =>
         val reg = vertexStates
-          .filter(col("is_forward"))
+          .filter(col("is_forward") === isForward)
           .select(
             col("graph_id"), col("vertex_id").as("source_id"),
             col("state").as("reg_state"), col("updated_at").as("reg_updated_at")
@@ -227,52 +244,79 @@ final class EdgeStore(
       vertexLog.map(_.filter(col("graph_id") === graphId)),
       compactionHorizon)
 
-  /** Vertex-pruned view for point metadata reads: restrict BOTH logs to one
-    * (graph, source vertex) before any fold. [[whereGraph]]'s rationale applies
-    * verbatim — [[metadata]]'s full-outer register join blocks predicate pushdown,
-    * so `metadata.filter(key)` folds and joins the WHOLE store to report one row —
-    * sharpened to a single vertex: every grouping/join key of the metadata
-    * derivation contains (graph_id, source_id/vertex_id), so pruning the logs first
-    * is semantics-preserving, and the point predicates sit directly over each scan.
-    * This is the shape of the reference's `get_metadata` RPC, which routes to ONE
-    * shard and reads one row (`ForwardingManager.scala:24-38`,
-    * `SqlShard.scala:146-152`); on (graph, vertex)-partitioned storage the read is
-    * partition-pruned instead of store-wide.
+  /** The store restricted to the log rows that can reach the given
+    * (graph_id, vertex_id, is_forward) keys — the ONE key restriction in front of every
+    * point- or batch-scale fold: `get_metadata`, `count2`'s leaf stats, the write path's
+    * pre-batch state and [[metadataPatched]]. Forward keys keep the edges they source,
+    * backward keys the edges they receive, and registers are kept by key and
+    * direction. Every grouping and join key of [[snapshot]], [[vertexStates]] and
+    * [[metadata]] contains the vertex on its side, so for the keys (in their own
+    * direction) the restricted store derives exactly what the whole store derives;
+    * every other derived row is partial and must not be read.
+    *
+    * [[whereGraph]]'s rationale applies, sharpened to vertices: the restriction sits
+    * directly over each log scan, where a filter on the derived output could not reach
+    * (metadata's full-outer register join blocks pushdown), so a call folds only its
+    * keys' rows instead of the store — the shape of the reference's metadata reads,
+    * which route to one shard and read one row per vertex (`ForwardingManager.scala:24-38`,
+    * `SqlShard.scala:146-152`). Size rule, shared with query terms' id lists
+    * ([[termEdges]]): up to [[EdgeStore.WhereInPredicateMax]] keys per direction an IN
+    * predicate per graph,
+    * which reaches the parquet scan, above that a broadcast semi-join. An edge kept
+    * by both directions appears twice, which every fold absorbs (LWW is idempotent).
     */
-  def whereVertex(graphId: Int, sourceId: Long): EdgeStore =
+  private[graft] def restrictedTo(keys: Seq[(Int, Long, Boolean)]): EdgeStore = {
+    // the rows of `df` whose (graph_id, vertexCol) is one of this direction's keys; a
+    // million-key IN list would blow up the expression tree, hence the semi-join
+    def side(df: DataFrame, isForward: Boolean, vertexCol: String): Option[DataFrame] = {
+      val ks = keys.collect { case (g, v, `isForward`) => (g, v) }.distinct
+      if (ks.isEmpty) None
+      else if (ks.size <= WhereInPredicateMax)
+        Some(df.filter(ks.groupBy(_._1).toSeq.sortBy(_._1)
+          .map { case (g, vs) => col("graph_id") === g && col(vertexCol).isin(vs.map(_._2): _*) }
+          .reduce(_ || _)))
+      else {
+        val spark = df.sparkSession
+        import spark.implicits._
+        Some(df.join(broadcast(ks.toDF("graph_id", vertexCol)), Seq("graph_id", vertexCol), "left_semi")
+          .select(df.columns.map(col): _*))
+      }
+    }
+    def union(df: DataFrame, sides: Option[DataFrame]*): DataFrame =
+      sides.flatten.reduceOption(_ unionByName _).getOrElse(df.limit(0))
     new EdgeStore(
-      log.filter(col("graph_id") === graphId && col("source_id") === sourceId),
-      vertexLog.map(_.filter(col("graph_id") === graphId && col("vertex_id") === sourceId)),
+      union(log, side(log, isForward = true, "source_id"),
+        side(log, isForward = false, "destination_id")),
+      vertexLog.map(v => union(v, side(v.filter(col("is_forward")), isForward = true, "vertex_id"),
+        side(v.filter(!col("is_forward")), isForward = false, "vertex_id"))),
       compactionHorizon)
+  }
 
   /** Adjacency relation for one query term, direction-normalized: the result column
     * `neighbor_id` is destination for forward terms, source for backward terms
     * (reference `ForwardingManager.scala:35-37`: backward graph = -graphId table; we swap
     * columns at plan time instead — SURVEY.md §1.4).
     */
-  def adjacency(term: QueryTerm): DataFrame = {
-    val (vertexCol, neighborCol) =
-      if (term.isForward) ("source_id", "destination_id") else ("destination_id", "source_id")
-    var df = snapshot
-      .filter(col("graph_id") === term.graphId && col(vertexCol) === term.sourceId)
-      .filter(col("state").isin(term.effectiveStates: _*))
-    term.destinationIds.foreach { ids =>
-      // small id lists stay an IN predicate (pushes to the scan); large ones become a
-      // broadcast semi-join — a million-id isin would blow up the expression tree
-      // (the reference routes big IN-lists to a separate query class, SqlShard.scala:323-349)
-      if (ids.size <= WhereInPredicateMax) df = df.filter(col(neighborCol).isin(ids: _*))
-      else {
-        val spark = log.sparkSession
-        import spark.implicits._
-        df = df.join(broadcast(ids.toDF(neighborCol)), Seq(neighborCol), "left_semi")
-      }
-    }
-    df.select(
-      col(neighborCol).as("neighbor_id"),
+  def adjacency(term: QueryTerm): DataFrame =
+    termEdges(term).select(
+      col(if (term.isForward) "destination_id" else "source_id").as("neighbor_id"),
       col("position"),
       col("updated_at"),
       col("state")
     )
+
+  /** The snapshot rows one query term reads: the edges on the term's side of its
+    * vertex, in its effective states, and among its destination ids when it has them.
+    * The ids are the far endpoints, so they restrict the log as keys of the opposite
+    * direction ([[restrictedTo]]'s size rule; the reference routes big IN-lists to a
+    * separate query class, `SqlShard.scala:323-349`).
+    */
+  private[graft] def termEdges(term: QueryTerm): DataFrame = {
+    val vertexCol = if (term.isForward) "source_id" else "destination_id"
+    term.destinationIds.fold(this)(ids => restrictedTo(ids.map((term.graphId, _, !term.isForward))))
+      .snapshot
+      .filter(col("graph_id") === term.graphId && col(vertexCol) === term.sourceId)
+      .filter(col("state").isin(term.effectiveStates: _*))
   }
 
   /** Point lookup (reference `Shard.get`, `SqlShard.scala:133-137`). */
@@ -337,11 +381,13 @@ final class EdgeStore(
     * per-key upserts (`SqlShard.scala:432-524`), never the whole store:
     *  - The batch is materialized once (eager local checkpoint; callers routinely derive
     *    ops from a snapshot query, which would otherwise re-fold per consumer).
-    *  - The pre-batch state the pipeline joins against is the LWW fold of the
-    *    KEY-PRUNED log: one scan of the log, broadcast-joined against the batch's
-    *    distinct touched (graph, vertex) keys (same trick as `QueryNode.leafStats`) —
-    *    at 100 TB with vertex-partitioned storage this is partition pruning, not a full
-    *    scan, and the fold collapses only the touched keys' rows.
+    *  - The pre-batch state the pipeline joins against is the LWW fold of the edge log
+    *    [[restrictedTo]] the batch's keys (single-edge ops: the direction-normalized
+    *    source; wildcard ops: the vertex on the op's side) — at 100 TB with
+    *    vertex-partitioned storage this is partition pruning, not a full scan, and the
+    *    fold collapses only the touched keys' rows. The vertex log is not restricted:
+    *    domination reads the register of each written edge's OTHER endpoint, which is
+    *    not a batch key.
     *  - The result is APPENDED to the log (newRows, batch-scale, materialized); folding
     *    the log stays on the compaction cadences (`EdgeStorage.compact`,
     *    `StreamingIngest`). A 10-row execute() therefore writes ~10 rows, not the store.
@@ -349,7 +395,7 @@ final class EdgeStore(
     *    fall back to the compacting form: fold the full snapshot once, return
     *    `snapshot ∪ newRows` (sound because lww is idempotent: lww(lww(L) ∪ R) =
     *    lww(L ∪ R)) — a bulk migration touching most keys rewrites the store anyway,
-    *    and its key set would not be broadcastable.
+    *    and its key set would not fit on the driver.
     */
   def applyOperations(ops: DataFrame, incrementalMax: Long = IncrementalBatchMax): EdgeStore =
     applyOperationsWithDelta(ops, incrementalMax)._1
@@ -378,7 +424,7 @@ final class EdgeStore(
     // three joins consume the base state with differing pushed projections (defeating
     // exchange reuse) — materialize it once; on the incremental path it is batch-scale
     val snap =
-      (if (incremental) lwwMerge(prunedLog(withDir)) else snapshot).localCheckpoint(true)
+      lwwMerge(if (incremental) restrictedTo(writeKeys(withDir)).log else log).localCheckpoint(true)
     val newRows = writeRows(withDir, snap, mergedVertexLog)
 
     // newRows stays LAZY: both of its inputs (the pruned snap and the batch) are
@@ -407,60 +453,36 @@ final class EdgeStore(
   /** Incremental metadata maintenance — the batch restatement of the reference's A2
     * count-delta path (`SqlShard.scala:470-524`): given the PRE-write metadata table
     * and the touched-vertex keys from [[applyOperationsWithDelta]], recompute metadata
-    * ONLY for those vertices (key-pruned broadcast semi-join on the log, same trick as
-    * the incremental write path) and keep every other row of `prev` as-is. At 100 TB a
-    * 10-row `execute()` re-aggregates ~10 vertices' adjacency, not the store.
-    * Equivalent to a full [[metadata]] recompute by construction (pinned by LwwSpec
-    * and the g26 oracle).
+    * ONLY for those vertices (the store [[restrictedTo]] them) and keep every other row
+    * of `prev` as-is. At 100 TB a 10-row `execute()` re-aggregates ~10 vertices'
+    * adjacency, not the store. Equivalent to a full [[metadata]] recompute by
+    * construction (pinned by LwwSpec and the g26 oracle).
     */
   def metadataPatched(prev: DataFrame, touched: DataFrame): DataFrame = {
-    val keys = touched.select(col("graph_id"), col("source_id")).distinct().localCheckpoint(true)
-    val prunedStore = new EdgeStore(
-      log.select(edgeCols: _*).join(broadcast(keys), Seq("graph_id", "source_id"), "left_semi"),
-      vertexLog.map(_.join(
-        broadcast(keys.withColumnRenamed("source_id", "vertex_id")),
-        Seq("graph_id", "vertex_id"), "left_semi")))
-    prev.join(broadcast(keys), Seq("graph_id", "source_id"), "left_anti")
-      .unionByName(prunedStore.metadata)
+    val keys = touched.select(col("graph_id"), col("source_id")).distinct().collect()
+      .map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val spark = log.sparkSession
+    import spark.implicits._
+    prev.join(broadcast(keys.toDF("graph_id", "source_id")), Seq("graph_id", "source_id"), "left_anti")
+      .unionByName(restrictedTo(keys.map { case (g, v) => (g, v, true) }).metadata)
   }
 
   private def withDirection(ops: DataFrame): DataFrame =
     if (ops.columns.contains("is_forward")) ops else ops.withColumn("is_forward", lit(true))
 
-  /** Log rows that can interact with the batch: one scan of the log with two broadcast
-    * marker joins on the batch's distinct touched (graph, vertex) keys — forward keys
-    * prune by source, backward-wildcard keys by destination (an OR of two semi-joins,
-    * evaluated in a single pass). LWW-folding duplicates is idempotent, so a row
-    * matching both sides is harmless.
+  /** The keys whose edge-log rows the write pipeline reads: a single-edge op's
+    * direction-normalized source (forward), a wildcard op's vertex on the op's side.
     */
-  private def prunedLog(withDir: DataFrame): DataFrame = {
-    val wild    = withDir.filter(col("destination_id").isNull)
-    val singles = withDir.filter(col("destination_id").isNotNull)
-    val kFwd = singles
-      .select(col("graph_id"),
-        when(col("is_forward"), col("source_id")).otherwise(col("destination_id")).as("source_id"))
-      .unionByName(wild.filter(col("is_forward")).select(col("graph_id"), col("source_id")))
-      .distinct()
-    val kBwd = wild.filter(!col("is_forward"))
-      .select(col("graph_id"), col("source_id").as("destination_id"))
-      .distinct()
-    log.select(edgeCols: _*)
-      .join(broadcast(kFwd.withColumn("pf", lit(true))), Seq("graph_id", "source_id"), "left")
-      .join(broadcast(kBwd.withColumn("pb", lit(true))), Seq("graph_id", "destination_id"), "left")
-      .filter(coalesce(col("pf"), lit(false)) || coalesce(col("pb"), lit(false)))
-      .select(edgeCols: _*)
-  }
-
-  /** Uncheckpointed incremental write delta, exposed so PlanSpec can assert the fold
-    * runs over the key-pruned scan (the production path checkpoints eagerly, which
-    * hides the plan).
-    */
-  private[graft] def plannedIncrementalRows(ops: DataFrame): DataFrame = {
-    val withDir = withDirection(ops)
-    writeRows(withDir, lwwMerge(prunedLog(withDir)), vertexLogOrEmpty.unionByName(
-      withDir.filter(col("destination_id").isNull).select(
-        col("graph_id"), col("source_id").as("vertex_id"), col("is_forward"),
-        col("state"), col("updated_at"))))
+  private def writeKeys(withDir: DataFrame): Seq[(Int, Long, Boolean)] = {
+    val single = col("destination_id").isNotNull
+    withDir
+      .select(
+        col("graph_id").cast("int"),
+        when(single && !col("is_forward"), col("destination_id")).otherwise(col("source_id"))
+          .cast("long"),
+        single || col("is_forward"))
+      .distinct().collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2))).toSeq
   }
 
   /** Steps 1b–4 of the write pipeline: per-edge writes from the batch against the given

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.pipeline.TextStats
 import graft.queries.Select
@@ -66,34 +68,6 @@ class PlanSpec extends SparkSpec {
       "filter must sit below the aggregation in the plan")
   }
 
-  test("a small write batch folds only the key-pruned log, not the whole store") {
-    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    // AQE wraps the tree in AdaptiveSparkPlanExec, which hides children from collect
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val store = TestGraph.store(spark, dir)
-      val ops = {
-        import spark.implicits._
-        Seq((1, 1L, Some(5L), 1, 3000000, None: Option[Long]),
-            (1, 2L, None: Option[Long], 2, 3000000, None: Option[Long]))
-          .toDF("graph_id", "source_id", "destination_id", "state", "updated_at", "position")
-      }
-      val exec = store.plannedIncrementalRows(ops).queryExecution.executedPlan
-      // the edge-key LWW folds (grouping includes destination_id) must each consume the
-      // broadcast key-pruned scan — never the raw full log
-      val edgeFolds = exec.collect {
-        case a: ObjectHashAggregateExec
-            if a.groupingExpressions.exists(_.toString.contains("destination_id")) => a
-      }
-      assert(edgeFolds.nonEmpty, s"expected a pruned LWW fold in the write plan:\n$exec")
-      edgeFolds.foreach { f =>
-        assert(f.collectFirst { case j: BroadcastHashJoinExec => j }.isDefined,
-          s"LWW fold input is not key-pruned (no broadcast prune below it):\n$f")
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
-
   test("int8 quantization is one map-only pass: no shuffle, inside codegen") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val p = plan(pipeline.Similarity.quantizeError(emb, "vec_id", "embedding"))
@@ -146,37 +120,6 @@ class PlanSpec extends SparkSpec {
       s"window must partition by (source, pack_group), not source alone:\n$p")
   }
 
-  test("metadataPatched folds only the key-pruned log below a broadcast prune") {
-    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val store = TestGraph.store(spark, dir)
-      val ops = {
-        import spark.implicits._
-        Seq((1, 1L, Some(5L), 0, 3000000, None: Option[Long]))
-          .toDF("graph_id", "source_id", "destination_id", "state", "updated_at", "position")
-      }
-      val (after, touched) = store.applyOperationsWithDelta(ops)
-      val exec = after.metadataPatched(store.metadata, touched)
-        .queryExecution.executedPlan
-      // the recompute side's metadata fold (grouping WITHOUT destination_id) must sit
-      // above a broadcast key-prune of the log — never a full-log aggregation
-      val metaFolds = exec.collect {
-        case a: ObjectHashAggregateExec
-            if a.groupingExpressions.exists(_.toString.contains("source_id")) &&
-              !a.groupingExpressions.exists(_.toString.contains("destination_id")) &&
-              a.aggregateExpressions.exists(_.toString.contains("partial")) => a
-      }
-      val (pruned, unpruned) = metaFolds.partition(
-        _.collectFirst { case j: BroadcastHashJoinExec => j }.isDefined)
-      assert(pruned.nonEmpty, s"expected a key-pruned metadata fold:\n$exec")
-      // the only unpruned fold allowed is `prev` itself (the pre-existing table)
-      assert(unpruned.size <= 1,
-        s"more than one full-log metadata fold in the patched plan:\n$exec")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
-
   test("whereGraph pushes the graph predicate below metadata's full-outer register join") {
     // metadata's register branch joins full_outer on (graph_id, source_id); Catalyst
     // never pushes predicates into a full-outer join, so the g20-shaped read must go
@@ -200,30 +143,122 @@ class PlanSpec extends SparkSpec {
       s"post-filter now pushes through the full-outer join — whereGraph may be obsolete:\n$naive")
   }
 
-  test("point metadata read pushes the (graph, vertex) key into BOTH log scans") {
-    // the facade path of every get_metadata/contains_metadata RPC: the reference
-    // routes to one shard and reads one row; here the whereVertex view must put the
-    // point predicates directly over each scan (a post-metadata filter cannot cross
-    // the full-outer register join, so it would fold the whole store per call)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-wherevertex").toString
-    val base = TestGraph.store(spark, dir)
-    base.snapshot.write.mode("overwrite").parquet(s"$tmp/edges")
+  /** Every parquet scan in the plans of the actions `body` runs (eager
+    * localCheckpoints included). Listener delivery is asynchronous but in order, so a
+    * marker action run after `body` flushes everything before it.
+    */
+  private def scansDuring(body: => Unit): Seq[FileSourceScanExec] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val marker = spark.range(1)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe eq marker.queryExecution) flushed.countDown() else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      marker.collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(p => AQE.collect(p) { case f: FileSourceScanExec => f })
+  }
+  private object AQE extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The values a scan's partition and data filters pin `column` to (=, IN, INSET). */
+  private def pinned(scan: FileSourceScanExec, column: String): Set[Any] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    (scan.partitionFilters ++ scan.dataFilters).flatMap(_.collect {
+      case EqualTo(a: Attribute, Literal(v, _)) if a.name == column => Seq(v)
+      case In(a: Attribute, list) if a.name == column => list.collect { case Literal(v, _) => v }
+      case InSet(a: Attribute, set) if a.name == column => set.toSeq
+    }.flatten).toSet
+  }
+
+  private def isScanOf(scan: FileSourceScanExec, dir: String): Boolean =
+    scan.relation.location.rootPaths.exists(_.getName == dir)
+
+  /** TestGraph's snapshot saved with the scale layout (graph-partitioned, source-sorted)
+    * under `edges`, plus a two-row register log under `vertex`.
+    */
+  private lazy val savedStore: String = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-keyed").toString
+    graft.store.EdgeStorage.save(TestGraph.store(spark, dir).snapshot, s"$tmp/edges", buckets = 4)
     import spark.implicits._
     Seq((1, 4L, true, 2, 2200000), (2, 8L, true, 2, 2200000))
       .toDF("graph_id", "vertex_id", "is_forward", "state", "updated_at")
       .write.mode("overwrite").parquet(s"$tmp/vertex")
+    tmp
+  }
+
+  test("point metadata read pushes the (graph, vertex) key into BOTH log scans") {
+    // the facade path of every get_metadata/contains_metadata RPC: the reference routes
+    // to one shard and reads one row; a post-metadata filter cannot cross the
+    // full-outer register join, so the key must sit on each scan
     val store = new graft.store.EdgeStore(
-      spark.read.parquet(s"$tmp/edges"),
-      Some(spark.read.parquet(s"$tmp/vertex")))
-    val p = plan(store.whereVertex(1, 4L).metadata)
-    assert("EqualTo\\(graph_id,1\\)".r.findAllMatchIn(p).size >= 2,
-      s"graph predicate must reach BOTH scans (edge log and vertex log):\n$p")
-    // assert on DataFilters expression text — the PushedFilters list renders
-    // truncated ("EqualTo(v...") once it holds more than a few entries
-    assert("source_id#\\d+L? = 4".r.findFirstIn(p).isDefined,
-      s"vertex key must reach the edge-log scan:\n$p")
-    assert("vertex_id#\\d+L? = 4".r.findFirstIn(p).isDefined,
-      s"vertex key must reach the vertex-log scan:\n$p")
+      spark.read.parquet(s"$savedStore/edges"), Some(spark.read.parquet(s"$savedStore/vertex")))
+    val scans = scansDuring(new service.FlockService(store).getMetadata(4L, 1))
+    val (edges, vertex) = (scans.filter(isScanOf(_, "edges")), scans.filter(isScanOf(_, "vertex")))
+    assert(edges.nonEmpty && vertex.nonEmpty, s"expected both log scans:\n${scans.mkString("\n")}")
+    edges.foreach { s =>
+      assert(pinned(s, "graph_id") == Set(1) && pinned(s, "source_id") == Set(4L), s"edge scan:\n$s")
+    }
+    vertex.foreach { s =>
+      assert(pinned(s, "graph_id") == Set(1) && pinned(s, "vertex_id") == Set(4L), s"vertex scan:\n$s")
+    }
+  }
+
+  test("a count2 batch folds only its leaf vertices, pinned per direction in the scans") {
+    val svc = new service.FlockService(graft.store.EdgeStorage.load(spark, s"$savedStore/edges"))
+    def term(v: Long, fwd: Boolean) = queries.TermOp(model.QueryTerm(v, 2, isForward = fwd))
+    val scans = scansDuring(svc.count2(Seq(
+      Seq(term(11L, fwd = true)),
+      Seq(term(11L, fwd = true), term(12L, fwd = true), queries.IntersectionOp),
+      Seq(term(7L, fwd = false)))))
+      .filter(isScanOf(_, "edges"))
+    val forward = scans.filter(pinned(_, "source_id").nonEmpty)
+    val backward = scans.filter(pinned(_, "destination_id").nonEmpty)
+    assert(forward.nonEmpty && backward.nonEmpty && forward.size + backward.size == scans.size,
+      s"every edge scan must carry one direction's keys:\n${scans.mkString("\n")}")
+    forward.foreach(s => assert(pinned(s, "source_id") == Set(11L, 12L), s.toString))
+    backward.foreach(s => assert(pinned(s, "destination_id") == Set(7L), s.toString))
+    scans.foreach(s => assert(pinned(s, "graph_id") == Set(2), s.toString))
+  }
+
+  test("a small write batch folds only the key-pruned log, not the whole store") {
+    import spark.implicits._
+    val store = graft.store.EdgeStorage.load(spark, s"$savedStore/edges")
+    // 8 forward adds, one backward add (normalizes to source 9), one backward wildcard
+    val ops = ((1L to 8L).map(s => (1, s, Option(5L), 0, 3000000, true)) ++ Seq(
+      (1, 50L, Option(9L), 0, 3000000, false),
+      (1, 7L, None: Option[Long], 2, 3000001, false)))
+      .toDF("graph_id", "source_id", "destination_id", "state", "updated_at", "is_forward")
+      .withColumn("position", lit(null).cast("long"))
+    val scans = scansDuring(store.applyOperations(ops)).filter(isScanOf(_, "edges"))
+    val forward = scans.filter(pinned(_, "source_id").nonEmpty)
+    val backward = scans.filter(pinned(_, "destination_id").nonEmpty)
+    assert(forward.nonEmpty && backward.nonEmpty && forward.size + backward.size == scans.size,
+      s"the pre-batch fold must read only key-restricted scans:\n${scans.mkString("\n")}")
+    forward.foreach(s => assert(pinned(s, "source_id") == (1L to 9L).toSet, s.toString))
+    backward.foreach(s => assert(pinned(s, "destination_id") == Set(7L), s.toString))
+  }
+
+  test("metadataPatched folds only the touched vertices, pinned in the edge-log scan") {
+    import spark.implicits._
+    val store = graft.store.EdgeStorage.load(spark, s"$savedStore/edges")
+    val ops = Seq((1, 1L, Option(5L), 0, 3000000, None: Option[Long]))
+      .toDF("graph_id", "source_id", "destination_id", "state", "updated_at", "position")
+    // a materialized prev: its own full fold is not part of the patch
+    val prev = store.metadata.localCheckpoint(eager = true)
+    val (after, touched) = store.applyOperationsWithDelta(ops)
+    val scans = scansDuring(after.metadataPatched(prev, touched).collect())
+      .filter(isScanOf(_, "edges"))
+    assert(scans.nonEmpty, "expected the recompute side to scan the edge log")
+    scans.foreach { s =>
+      assert(pinned(s, "graph_id") == Set(1) && pinned(s, "source_id") == Set(1L), s"edge scan:\n$s")
+    }
   }
 
   test("vocabCoverage broadcasts the top-k vocabulary against the token stream") {

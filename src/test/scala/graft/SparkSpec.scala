@@ -19,16 +19,12 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     super.afterAll()
   }
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  /** The production session ([[GraftSession.builder]]) at 4 cores, plus a test app
+    * name and a throwaway warehouse dir.
+    */
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.warehouse.dir", s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // UTC like GraftSession: EventTime.micros's TIMESTAMP_NTZ branch depends on it
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   /** Test-side mirror of the md5-prefix register hash (Sketches.h32: first 4
