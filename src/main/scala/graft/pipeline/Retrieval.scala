@@ -125,9 +125,12 @@ object Retrieval {
       (lit(1000000L) * col("tf") + lit(300000L) + col("rr")).cast("double")
     val idfRaw = (lit(2L) * col("n_docs") - lit(2L) * col("df_count") + lit(1L)).cast("double") /
       (lit(2L) * col("df_count") + lit(1L)).cast("double")
+    // dfreq (|vocab| rows) is the build side by hint: left to AQE, the per-doc side's
+    // cached stage can finish first and be picked as the build side instead, which
+    // also drops the doc partitioning every consumer below relies on
     val weights = tf
       .withColumn("dl", sum(col("tf")).over(dlWin))
-      .join(dfreq, "token")
+      .join(broadcast(dfreq), "token")
       .crossJoin(broadcast(totals))
       .withColumn("rr", rr)
       .withColumn("w", roundPos(lit(1000000.0) * (tfPart * idfRaw)))

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,20 +30,54 @@ import graft.model._
   * `get_metadata`, a `count2` batch's leaf stats, an `execute` batch's pre-write state,
   * a metadata patch — folds the logs [[restrictedTo]] its own vertex keys, never the
   * whole store.
+  *
+  * One base, one delta: a version is a BASE relation per log (the loaded relation, or
+  * the last fold) plus the rows written since, held on the driver as ONE local relation
+  * per log. Each write batch replaces the delta with `delta ++ its rows`, so a version
+  * never grows the plan by more than that one Union branch, and reading it re-runs none
+  * of the earlier batches' joins — the reference applies each write as a per-key upsert
+  * and never re-reads history (`SqlShard.scala:432-524`). A write that would pass
+  * [[EdgeStore.DeltaMax]] rows takes the compacting form instead: the log folds into a
+  * new materialized base (the memtable flush of an LSM tree). Every other derived store
+  * ([[asOf]], [[whereGraph]], [[restrictedTo]], [[repairWith]]) starts a new chain over
+  * its own logs.
+  *
+  * @param compactionHorizon oldest instant this store can truthfully time-travel to.
+  *   `None` = full write log (every cut answerable). Compaction
+  *   ([[EdgeStorage.compact]], `TestGraph.compactedStore`, the write path's fold)
+  *   discards superseded writes, so the compacted relation can only replay cuts at or
+  *   after the newest write that superseded a discarded one — [[asOf]] REJECTS older
+  *   cuts instead of silently returning a state that never existed.
   */
-final class EdgeStore(
-    val log: DataFrame,
-    val vertexLog: Option[DataFrame] = None,
-    /** Oldest instant this store can truthfully time-travel to. `None` = full write
-      * log (every cut answerable). Compaction ([[EdgeStorage.compact]],
-      * `TestGraph.compactedStore`) discards superseded writes, so the compacted
-      * relation can only replay cuts at or after the newest write that superseded a
-      * discarded one — [[asOf]] REJECTS older cuts instead of silently returning a
-      * state that never existed.
-      */
-    val compactionHorizon: Option[Int] = None
+final class EdgeStore private (
+    base: DataFrame,
+    vertexBase: Option[DataFrame],
+    val compactionHorizon: Option[Int],
+    private val edgeDelta: Vector[Row],
+    private val registerDelta: Vector[Row]
 ) {
   import EdgeStore._
+
+  /** A store over the given logs, with no delta. */
+  def this(log: DataFrame, vertexLog: Option[DataFrame] = None, compactionHorizon: Option[Int] = None) =
+    this(log, vertexLog, compactionHorizon, Vector.empty, Vector.empty)
+
+  /** The edge write log: the base, plus the delta's local relation once this version
+    * carries writes (a store with no writes keeps exactly its base plan).
+    */
+  val log: DataFrame =
+    if (edgeDelta.isEmpty) base
+    else base.select(edgeCols: _*).unionByName(localFrame(base.sparkSession, edgeDelta, edgeLogSchema))
+
+  /** The vertex-register write log, base plus delta like [[log]]; `None` = no register
+    * was ever written.
+    */
+  val vertexLog: Option[DataFrame] =
+    if (registerDelta.isEmpty) vertexBase
+    else {
+      val delta = localFrame(base.sparkSession, registerDelta, vertexLogSchema)
+      Some(vertexBase.fold(delta)(_.select(vertexLogSchema.fieldNames.map(col): _*).unionByName(delta)))
+    }
 
   /** Current edge snapshot: per (graphId, sourceId, destinationId) the row with max
     * (updatedAt, statePriority, position) — reference LWW semantics `Edge.scala:61-68`
@@ -139,9 +173,7 @@ final class EdgeStore(
     }
 
   private def vertexLogOrEmpty: DataFrame =
-    vertexLog.getOrElse(
-      log.sparkSession.createDataFrame(
-        log.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], vertexLogSchema))
+    vertexLog.getOrElse(localFrame(log.sparkSession, Nil, vertexLogSchema))
 
   /** Current vertex-register snapshot: per (graphId, vertexId, direction) the LWW-max
     * (updatedAt, statePriority) register — the reference's metadata-state register
@@ -379,8 +411,14 @@ final class EdgeStore(
     *
     * Scale shape — the write path touches only batch-scale data, like the reference's
     * per-key upserts (`SqlShard.scala:432-524`), never the whole store:
-    *  - The batch is materialized once (eager local checkpoint; callers routinely derive
-    *    ops from a snapshot query, which would otherwise re-fold per consumer).
+    *  - ONE bounded driver round trip decides the path: the batch is collected with a
+    *    limit of one row more than the driver may take: the room left in the delta
+    *    (see the class doc), or `incrementalMax` when smaller (`-1` forces the
+    *    compacting form). A batch that comes back whole takes the incremental
+    *    path: its keys and register writes are read on the driver, and it runs on as a
+    *    local relation (materialized once; callers routinely derive ops from a snapshot
+    *    query, which would otherwise re-fold per consumer). A batch built on the
+    *    driver (`FlockService.execute`) costs no Spark job here.
     *  - The pre-batch state the pipeline joins against is the LWW fold of the edge log
     *    [[restrictedTo]] the batch's keys (single-edge ops: the direction-normalized
     *    source; wildcard ops: the vertex on the op's side) — at 100 TB with
@@ -388,16 +426,19 @@ final class EdgeStore(
     *    fold collapses only the touched keys' rows. The vertex log is not restricted:
     *    domination reads the register of each written edge's OTHER endpoint, which is
     *    not a batch key.
-    *  - The result is APPENDED to the log (newRows, batch-scale, materialized); folding
-    *    the log stays on the compaction cadences (`EdgeStorage.compact`,
-    *    `StreamingIngest`). A 10-row execute() therefore writes ~10 rows, not the store.
-    *  - Batches larger than `incrementalMax` (default [[EdgeStore.IncrementalBatchMax]])
-    *    fall back to the compacting form: fold the full snapshot once, return
-    *    `snapshot ∪ newRows` (sound because lww is idempotent: lww(lww(L) ∪ R) =
-    *    lww(L ∪ R)) — a bulk migration touching most keys rewrites the store anyway,
-    *    and its key set would not fit on the driver.
+    *  - The batch's edge rows are collected once and appended to the delta, its
+    *    registers likewise: the next version's log is still `base ∪ delta`, so reads
+    *    and later writes never re-run this batch's joins. A 10-row execute() writes
+    *    ~10 rows, not the store.
+    *  - A batch whose rows do not fit the delta (too many ops, or a wildcard fanning
+    *    out past the room) takes the compacting form: fold the full log once into a
+    *    materialized pre-batch state, return `snapshot ∪ newRows` with an empty delta
+    *    and the compaction horizon raised over what the fold discarded (sound because
+    *    lww is idempotent: lww(lww(L) ∪ R) = lww(L ∪ R)). It is the flush of the
+    *    delta: a bulk migration rewrites the store anyway, and its rows would not fit
+    *    on the driver.
     */
-  def applyOperations(ops: DataFrame, incrementalMax: Long = IncrementalBatchMax): EdgeStore =
+  def applyOperations(ops: DataFrame, incrementalMax: Long = DeltaMax): EdgeStore =
     applyOperationsWithDelta(ops, incrementalMax)._1
 
   /** [[applyOperations]] additionally returning the touched-vertex key set — the
@@ -408,46 +449,67 @@ final class EdgeStore(
     */
   def applyOperationsWithDelta(
       ops: DataFrame,
-      incrementalMax: Long = IncrementalBatchMax
+      incrementalMax: Long = DeltaMax
   ): (EdgeStore, DataFrame) = {
-    val withDir = withDirection(ops).localCheckpoint(true)
-    val wild    = withDir.filter(col("destination_id").isNull)
+    val batch = conformed(withDirection(ops), opSchema)
+    // the batch rows the driver may take: within incrementalMax and the delta's room
+    val fits = math.max(-1L, math.min(incrementalMax, DeltaMax - edgeDelta.size - registerDelta.size))
+    val opRows = batch.limit(fits.toInt + 1).collect()
+    if (opRows.length > fits) compacting(batch.localCheckpoint(true))
+    else if (opRows.isEmpty) (this, localFrame(log.sparkSession, Nil, touchedSchema))
+    else incremental(opRows)
+  }
 
-    // 1. vertex-register writes from wildcard ops
-    val newRegisters = wild.select(
+  /** The incremental path over a non-empty batch already on the driver (`opSchema` rows). */
+  private def incremental(opRows: Array[Row]): (EdgeStore, DataFrame) = {
+    val spark = log.sparkSession
+    val batch = localFrame(spark, opRows, opSchema)
+    val isSingle = (r: Row) => !r.isNullAt(2)
+    // 1. vertex-register writes from wildcard ops, visible to this batch's edge writes
+    val newRegisters = opRows.filterNot(isSingle)
+      .map(r => Row(r.getInt(0), r.getLong(1), r.getBoolean(6), r.getInt(3), r.getInt(4))).toVector
+    val next = new EdgeStore(base, vertexBase, compactionHorizon, edgeDelta, registerDelta ++ newRegisters)
+    // the edge-log keys the pipeline reads: a single-edge op's direction-normalized
+    // source (forward), a wildcard op's vertex on the op's side
+    val keys = opRows.toSeq.map { r =>
+      val normalizedBackward = isSingle(r) && !r.getBoolean(6)
+      (r.getInt(0), r.getLong(if (normalizedBackward) 2 else 1), isSingle(r) || r.getBoolean(6))
+    }.distinct
+    // three joins consume the pre-batch state with differing pushed projections
+    // (defeating exchange reuse) — materialize it once; it is batch-scale
+    val snap = lwwMerge(restrictedTo(keys).log).localCheckpoint(true)
+    val newRows = writeRows(batch, snap, next.vertexLogOrEmpty)
+
+    // a wildcard can fan out past the delta's room: then the batch is compacted instead
+    val room = DeltaMax - edgeDelta.size - next.registerDelta.size
+    val rows = conformed(newRows, edgeLogSchema).limit(room + 1).collect()
+    if (rows.length > room) compacting(batch)
+    else {
+      val touched = (rows.toSeq.map(r => Row(r.getInt(0), r.getLong(1))) ++
+        newRegisters.map(r => Row(r.getInt(0), r.getLong(1)))).distinct
+      (new EdgeStore(base, vertexBase, compactionHorizon, edgeDelta ++ rows, next.registerDelta),
+        localFrame(spark, touched, touchedSchema))
+    }
+  }
+
+  /** The compacting form, for a batch whose rows do not fit the driver-held delta: the
+    * whole log folded once into a materialized pre-batch state, and the batch's rows
+    * appended to it lazily. It is a new chain with an empty delta. The fold discards
+    * superseded writes, so the horizon rises over them ([[EdgeStorage.horizonOf]], as
+    * [[EdgeStorage.compact]] does).
+    */
+  private def compacting(batch: DataFrame): (EdgeStore, DataFrame) = {
+    val newRegisters = batch.filter(col("destination_id").isNull).select(
       col("graph_id"), col("source_id").as("vertex_id"), col("is_forward"),
-      col("state"), col("updated_at")
-    )
-    val mergedVertexLog = vertexLogOrEmpty.unionByName(newRegisters)
-
-    val incremental = withDir.count() <= incrementalMax
-    // three joins consume the base state with differing pushed projections (defeating
-    // exchange reuse) — materialize it once; on the incremental path it is batch-scale
-    val snap =
-      lwwMerge(if (incremental) restrictedTo(writeKeys(withDir)).log else log).localCheckpoint(true)
-    val newRows = writeRows(withDir, snap, mergedVertexLog)
-
-    // newRows stays LAZY: both of its inputs (the pruned snap and the batch) are
-    // already checkpointed, so recompute is batch-scale joins — cheaper at every scale
-    // tested than materializing it (a localCheckpoint additionally produces a
-    // LogicalRDD whose origin constraints reference pre-checkpoint attribute ids and
-    // break Union constraint rewriting downstream).
-    val store =
-      if (incremental)
-        new EdgeStore(
-          log.select(edgeCols: _*).unionByName(newRows),
-          Some(mergedVertexLog),
-          compactionHorizon)
-      else
-        // the compacting fallback discards this batch's superseded rows too, but the
-        // pre-existing horizon still bounds the oldest truthful cut (batch timestamps
-        // at or above it only tighten what a FUTURE compaction may raise it to)
-        new EdgeStore(snap.select(edgeCols: _*).unionByName(newRows), Some(mergedVertexLog),
-          compactionHorizon)
+      col("state"), col("updated_at"))
+    val vertices = vertexLogOrEmpty.unionByName(newRegisters)
+    val snap = lwwMerge(log).localCheckpoint(true)
+    val horizon = (compactionHorizon.toSeq ++ EdgeStorage.horizonOf(log).toSeq).reduceOption(_ max _)
+    val newRows = writeRows(batch, snap, vertices)
     val touched = newRows.select(col("graph_id"), col("source_id"))
       .unionByName(newRegisters.select(col("graph_id"), col("vertex_id").as("source_id")))
       .distinct()
-    (store, touched)
+    (new EdgeStore(snap.unionByName(newRows), Some(vertices), horizon), touched)
   }
 
   /** Incremental metadata maintenance — the batch restatement of the reference's A2
@@ -459,8 +521,8 @@ final class EdgeStore(
     * construction (pinned by LwwSpec and the g26 oracle).
     */
   def metadataPatched(prev: DataFrame, touched: DataFrame): DataFrame = {
-    val keys = touched.select(col("graph_id"), col("source_id")).distinct().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val keys = touched.select(col("graph_id"), col("source_id")).collect()
+      .map(r => (r.getInt(0), r.getLong(1))).distinct.toSeq
     val spark = log.sparkSession
     import spark.implicits._
     prev.join(broadcast(keys.toDF("graph_id", "source_id")), Seq("graph_id", "source_id"), "left_anti")
@@ -469,21 +531,6 @@ final class EdgeStore(
 
   private def withDirection(ops: DataFrame): DataFrame =
     if (ops.columns.contains("is_forward")) ops else ops.withColumn("is_forward", lit(true))
-
-  /** The keys whose edge-log rows the write pipeline reads: a single-edge op's
-    * direction-normalized source (forward), a wildcard op's vertex on the op's side.
-    */
-  private def writeKeys(withDir: DataFrame): Seq[(Int, Long, Boolean)] = {
-    val single = col("destination_id").isNotNull
-    withDir
-      .select(
-        col("graph_id").cast("int"),
-        when(single && !col("is_forward"), col("destination_id")).otherwise(col("source_id"))
-          .cast("long"),
-        single || col("is_forward"))
-      .distinct().collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2))).toSeq
-  }
 
   /** Steps 1b–4 of the write pipeline: per-edge writes from the batch against the given
     * pre-batch state `snap`, vertex-state dominated and position-resolved.
@@ -576,15 +623,18 @@ final class EdgeStore(
     * `SqlShard.scala:646-697`): append vertex-register writes WITHOUT edge fanout —
     * the path copy/repair uses to move vertex state between replicas (the Multi job's
     * register-plus-fanout is the wildcard branch of [[applyOperations]]). Columns:
-    * graph_id, vertex_id, is_forward, state, updated_at.
+    * graph_id, vertex_id, is_forward, state, updated_at. The registers join the
+    * driver-held delta like an execute batch's while they fit in it.
     */
-  def writeVertexStates(registers: DataFrame): EdgeStore =
-    new EdgeStore(
-      log,
-      Some(vertexLogOrEmpty.unionByName(
-        registers.select(vertexLogSchema.fieldNames.map(col): _*))),
-      compactionHorizon
-    )
+  def writeVertexStates(registers: DataFrame): EdgeStore = {
+    val room = DeltaMax - edgeDelta.size - registerDelta.size
+    val regs = conformed(registers, vertexLogSchema)
+    val rows = regs.limit(room + 1).collect()
+    if (rows.length <= room)
+      new EdgeStore(base, vertexBase, compactionHorizon, edgeDelta, registerDelta ++ rows)
+    else // too many for the delta: they start a new vertex-log chain
+      new EdgeStore(base, Some(vertexLogOrEmpty.unionByName(regs)), compactionHorizon, edgeDelta, Vector.empty)
+  }
 
   /** Reciprocal edges: every edge (s, d) in the given states whose reverse (d, s) also
     * exists in those states. Computed as ONE grouped aggregation on the unordered pair
@@ -653,14 +703,24 @@ object EdgeStore {
     */
   val WhereInPredicateMax: Int = 1000
 
-  /** Largest op batch (rows) that takes the incremental key-pruned write path; bigger
-    * batches fall back to the compacting full-fold form. ~1M distinct touched keys is
-    * a ~12 MB broadcast — comfortably inside executor broadcast budgets.
+  /** Most rows (edge and register writes together) a version holds on the driver as its
+    * delta; a write that would pass it is folded with the log into a new base instead.
+    * Planning a read grows with the delta (Catalyst evaluates pushed filters over the
+    * local rows): on a 4-core host a point read over a 100k-row parquet base planned in
+    * 32 ms with no delta, 33 ms at 1k rows, 44 ms at 10k and 97 ms at 50k. 5000 rows
+    * keeps a full delta within 1.25x of the empty one's plan time and ~0.5 MB of driver
+    * heap, while a 10-op batch flushes (a full-store fold) only once per ~500 batches.
     */
-  val IncrementalBatchMax: Long = 1000000L
+  private[graft] val DeltaMax: Int = 5000
 
-  val edgeColNames: Seq[String] =
-    Seq("graph_id", "source_id", "destination_id", "position", "updated_at", "count", "state")
+  /** The edge log's columns and types, as a write batch's rows are held in the delta. */
+  private val edgeLogSchema: StructType = StructType(Seq(
+    StructField("graph_id", IntegerType), StructField("source_id", LongType),
+    StructField("destination_id", LongType), StructField("position", LongType),
+    StructField("updated_at", IntegerType), StructField("count", IntegerType),
+    StructField("state", IntegerType)))
+
+  val edgeColNames: Seq[String] = edgeLogSchema.fieldNames.toSeq
   def edgeCols: Seq[Column] = edgeColNames.map(col)
 
   /** Vertex-register log schema: one row per register write (reference `Metadata.scala:29`
@@ -673,6 +733,28 @@ object EdgeStore {
     StructField("state", IntegerType, nullable = false),
     StructField("updated_at", IntegerType, nullable = false)
   ))
+
+  /** A write batch's columns and types on the driver (`destination_id` null = wildcard). */
+  private val opSchema: StructType = StructType(Seq(
+    StructField("graph_id", IntegerType), StructField("source_id", LongType),
+    StructField("destination_id", LongType), StructField("state", IntegerType),
+    StructField("updated_at", IntegerType), StructField("position", LongType),
+    StructField("is_forward", BooleanType)))
+
+  private val touchedSchema: StructType =
+    StructType(Seq(StructField("graph_id", IntegerType), StructField("source_id", LongType)))
+
+  /** `df`'s columns named by `schema`, in its order and cast to its types. */
+  private def conformed(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+
+  /** Driver rows as a local relation: planned and filtered on the driver, no stale
+    * constraints from an earlier plan, and it takes `updated_at` cuts like any log.
+    */
+  private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
 
   def apply(log: DataFrame): EdgeStore = new EdgeStore(log)
 

@@ -48,8 +48,11 @@ final class StreamingEdgeIngest(initial: EdgeStore, compactEvery: Int = 8) {
     * stream: columns graph_id, source_id, destination_id (null = wildcard), state,
     * updated_at, position, optional is_forward). Each micro-batch runs the full write
     * semantics — vertex-register writes, direction normalization, W2 state domination,
-    * wildcard fanout — via `EdgeStore.applyOperations`, which also compacts the log per
-    * batch, so no separate compaction cadence is needed.
+    * wildcard fanout — via `EdgeStore.applyOperations`. It compacts nothing per batch:
+    * each micro-batch's rows join the store's one driver-held delta, so the plan stays
+    * one base plus one delta however many batches arrive, and the delta flushes into a
+    * folded base when it reaches `EdgeStore.DeltaMax` rows. That flush is this path's
+    * compaction cadence; `compactEvery` does not apply to it.
     */
   def opsWriter(ops: DataFrame): DataStreamWriter[Row] =
     ops.writeStream

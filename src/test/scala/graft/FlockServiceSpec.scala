@@ -3,6 +3,7 @@ package graft
 import graft.model._
 import graft.queries._
 import graft.service.FlockService
+import graft.store.EdgeStore
 
 /** Service-façade lifecycle — the demo walkthrough shape (`doc/demo.markdown:117-262`):
   * adds, reciprocal intersection, union, difference, negate/archive, counts.
@@ -129,6 +130,115 @@ class FlockServiceSpec extends SparkSpec {
     for (exact <- Seq(false, true))
       assert(graft.functions.Packing.unpackInts(svc.count2Packed(programs, exact)).toSeq ==
         svc.count2(programs, exact).map(_.toInt), s"exact = $exact")
+  }
+
+  /** What a store answers, for comparing two stores: its snapshot, its metadata in both
+    * directions, and first pages of the given set-op programs.
+    */
+  private def readsOf(store: EdgeStore, programs: Seq[Seq[SelectOperation]]) = (
+    store.snapshot.collect().toSet,
+    store.metadata(isForward = true).collect().toSet,
+    store.metadata(isForward = false).collect().toSet,
+    new FlockService(store).select2(programs.map(p => (p, Page(20, Cursor.Start)))))
+
+  test("50 chained execute batches keep one base and one delta, and read like one batch") {
+    val rnd = new scala.util.Random(23)
+    val base = EdgeStore.fromEdges(spark, for {
+      g <- Seq(1, 2); s <- 1L to 30L; d <- 100L to 130L if rnd.nextInt(5) == 0
+    } yield Edge(g, s, d, rnd.nextInt(1000).toLong, 50 + rnd.nextInt(50), 0, State.all(rnd.nextInt(4))))
+    // Chaining equals one batch when no write can see another's effect: every edge key
+    // takes at most one single-edge op, and wildcards (each vertex once) fan out over
+    // edges no single-edge op touches — forward ones in graph 1 over sources 1-15,
+    // backward ones in graph 2 over destinations 100-114.
+    val fwdWild = (1L to 15L).iterator
+    val bwdWild = (100L to 114L).iterator
+    val singleKeys = rnd.shuffle(
+      (for (s <- 16L to 30L; d <- (100L to 130L) ++ (200L to 215L)) yield (1, s, d)) ++
+        (for (s <- 1L to 30L; d <- (115L to 130L) ++ (200L to 215L)) yield (2, s, d))).iterator
+    var clock = 1000
+    def single(): WriteOp = {
+      val (g, s, d) = singleKeys.next()
+      val fwd = rnd.nextBoolean() // a backward op names the edge from its destination
+      clock += 1
+      WriteOp(g, if (fwd) s else d, Some(if (fwd) d else s), State.all(rnd.nextInt(4)), clock,
+        if (rnd.nextBoolean()) Some(rnd.nextInt(1000).toLong) else None, fwd)
+    }
+    def wildcard(b: Int): Option[WriteOp] = {
+      clock += 1
+      val state = State.all(rnd.nextInt(4))
+      if (b % 2 == 0) fwdWild.nextOption().map(WriteOp(1, _, None, state, clock, None, isForward = true))
+      else bwdWild.nextOption().map(WriteOp(2, _, None, state, clock, None, isForward = false))
+    }
+    val batches = (1 to 50).map(b => Seq.fill(1 + rnd.nextInt(3))(single()) ++ wildcard(b))
+    val chain = batches.foldLeft(new FlockService(base))(_ execute _).store
+    val oneBatch = new FlockService(base).execute(batches.flatten).store
+
+    assert(logBranches(chain.log) <= 2, "the edge log stays base + one delta")
+    assert(chain.vertexLog.exists(logBranches(_) <= 2), "the register log stays base + one delta")
+    assert(chain.compactionHorizon.isEmpty, "no flush below the delta cap: every cut answerable")
+    val programs =
+      for (g <- Seq(1, 2); v <- Seq(3L, 16L, 22L); op <- Seq(IntersectionOp, UnionOp, DifferenceOp))
+        yield Seq(TermOp(QueryTerm(v, g)), TermOp(QueryTerm(v + 1, g)), op)
+    val backward = Seq(TermOp(QueryTerm(105L, 2, isForward = false)),
+      TermOp(QueryTerm(120L, 2, isForward = false)), UnionOp)
+    assert(readsOf(chain, programs :+ backward) == readsOf(oneBatch, programs :+ backward))
+  }
+
+  test("a write that would pass the delta cap compacts the chain and raises the horizon") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val cap = EdgeStore.DeltaMax
+    // (alice,bob) written twice in the base; carl has half a cap of edges to fan out over
+    val base = storeOf(
+      Seq(edge(alice, bob, 1, at = 100), edge(alice, bob, 1, at = 300, state = State.Removed)) ++
+        (1L to cap / 2).map(d => edge(carl, 1000L + d, d, at = 50)): _*)
+    // single-edge adds on fresh keys (no register on either end: each add is its own row)
+    def bulk(b: Int) = spark.range(cap / 3 + 1).select(
+      lit(FOLLOWS).as("graph_id"), (lit(100000L * b) + col("id")).as("source_id"),
+      lit(7L).as("destination_id"), lit(State.Normal).as("state"),
+      (lit(2000 * b) + col("id") % 1000).cast("int").as("updated_at"), col("id").as("position"),
+      lit(true).as("is_forward"))
+    def rowsOf(ops: org.apache.spark.sql.DataFrame) = ops.select(col("graph_id"), col("source_id"),
+      col("destination_id"), col("position"), col("updated_at"), lit(0).as("count"), col("state"))
+    val pre = Seq(1, 2).foldLeft(new FlockService(base))(_ executeDF bulk(_))
+    assert(logBranches(pre.store.log) == 2 && pre.store.compactionHorizon.isEmpty, "base + delta")
+    val programs = Seq(
+      Seq(TermOp(QueryTerm(carl, FOLLOWS)), TermOp(QueryTerm(darcy, FOLLOWS)), UnionOp),
+      Seq(TermOp(QueryTerm(7L, FOLLOWS, isForward = false)),
+        TermOp(QueryTerm(earl, FOLLOWS, isForward = false)), UnionOp))
+    def assertCompacted(after: EdgeStore, raw: EdgeStore): Unit = {
+      assert(after.compactionHorizon.contains(300), "raised to the newest write of a folded key")
+      assert(readsOf(after, programs) == readsOf(raw, programs))
+      val err = intercept[IllegalArgumentException] { after.asOf(299) }
+      assert(err.getMessage.contains("compaction horizon"), err.getMessage)
+      for (ts <- Seq(300, 4500, 9000))
+        assert(after.asOf(ts).snapshot.collect().toSet == raw.asOf(ts).snapshot.collect().toSet,
+          s"asOf($ts)")
+    }
+
+    // a wildcard whose fanout passes the delta's room; the truth is pre's raw logs plus
+    // the batch's rows
+    val wildAt = 9000
+    val wild = Seq(WriteOp(FOLLOWS, carl, None, State.Archived, wildAt), add(darcy, earl, 9001))
+    val fanout = (1L to cap / 2).map(d => (FOLLOWS, carl, 1000L + d, d, wildAt, 0, State.Archived)) :+
+      ((FOLLOWS, darcy, earl, 9001L * 1000, 9001, 0, State.Normal))
+    val afterWild = pre.execute(wild).store
+    assertCompacted(afterWild, new EdgeStore(
+      pre.store.log.unionByName(fanout.toDF(EdgeStore.edgeColNames: _*)),
+      Some(Seq((FOLLOWS, carl, true, State.Archived, wildAt))
+        .toDF(EdgeStore.vertexLogSchema.fieldNames.toSeq: _*))))
+    val oneBatch = base.applyOperations(bulk(1).unionByName(bulk(2)).unionByName(
+      wild.toDF("graph_id", "source_id", "destination_id", "state", "updated_at", "position",
+        "is_forward")))
+    assert(readsOf(oneBatch, programs) == readsOf(afterWild, programs))
+    // the compacted version starts a new chain: its versions again add no branch
+    val next = new FlockService(afterWild).execute(Seq(add(frank, alice, 9100)))
+    val later = next.execute(Seq(add(frank, bob, 9101)))
+    assert(logBranches(later.store.log) == logBranches(next.store.log))
+
+    // a batch with more ops than the delta's room
+    assertCompacted(pre.executeDF(bulk(3)).store,
+      new EdgeStore(pre.store.log.unionByName(rowsOf(bulk(3))), pre.store.vertexLog))
   }
 
   /** The metadata rule restated in plain Scala over a store's raw logs, per

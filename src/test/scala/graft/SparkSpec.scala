@@ -67,6 +67,15 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       )
   }
 
+  /** Branches the unions of a log's logical plan hold (1 = no union), counted the way
+    * the benchmark's store-shape metric counts them.
+    */
+  def logBranches(log: DataFrame): Int =
+    math.max(1, log.queryExecution.logical.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union =>
+        u.children.count(!_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union])
+    }.sum)
+
   def snapshotOf(store: EdgeStore): Map[(Long, Long), Edge] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -246,4 +246,21 @@ class StorageSpec extends SparkSpec {
     val mf = full.metadata.collect().map(r => r.getLong(1) -> r.getInt(2)).toMap
     assert(mv == mf, "register-aware metadata must agree across paths")
   }
+
+  test("the write path's fold raises the horizon: asOf below it throws, at/above it is truthful") {
+    // (alice,bob) Normal@100 then Removed@300; one unrelated op through the compacting
+    // fallback folds the loser away, so a cut at 200 could no longer see Normal@100
+    val st = storeOf(edge(alice, bob, 1, at = 100), edge(alice, bob, 1, at = 300, state = State.Removed))
+    val ops = opsDF((carl, darcy, State.Normal, 400, None))
+    val folded = st.applyOperations(ops, incrementalMax = -1L)
+    assert(folded.compactionHorizon.contains(300), "horizon = newest write of a folded key")
+    val err = intercept[IllegalArgumentException] { folded.asOf(200) }
+    assert(err.getMessage.contains("compaction horizon"), err.getMessage)
+    // the incremental path folds nothing: it keeps every cut, and is the truth at each
+    val inc = st.applyOperations(ops)
+    assert(inc.compactionHorizon.isEmpty)
+    assert(snapshotOf(inc.asOf(200))((alice, bob)).state == State.Normal)
+    for (ts <- Seq(300, 399, 400))
+      assert(snapshotOf(folded.asOf(ts)) == snapshotOf(inc.asOf(ts)), s"asOf($ts)")
+  }
 }

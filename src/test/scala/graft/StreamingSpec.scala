@@ -78,6 +78,9 @@ class StreamingSpec extends SparkSpec {
       query.processAllAvailable()
       val s3 = snapshotOf(ingest.current)
       assert(s3.contains((earl, darcy)) && !s3.contains((darcy, earl)))
+      // three micro-batches later both logs are still one base plus one delta
+      assert(logBranches(ingest.current.log) == 2)
+      assert(ingest.current.vertexLog.exists(logBranches(_) <= 2))
     } finally query.stop()
   }
 }
