@@ -125,12 +125,16 @@ object Retrieval {
       (lit(1000000L) * col("tf") + lit(300000L) + col("rr")).cast("double")
     val idfRaw = (lit(2L) * col("n_docs") - lit(2L) * col("df_count") + lit(1L)).cast("double") /
       (lit(2L) * col("df_count") + lit(1L)).cast("double")
-    // dfreq (|vocab| rows) is the build side by hint: left to AQE, the per-doc side's
-    // cached stage can finish first and be picked as the build side instead, which
-    // also drops the doc partitioning every consumer below relies on
+    // dfreq (|vocab| rows) is the build side by hint while the planner's estimate of it
+    // is within the broadcast threshold: left to AQE, the per-doc side's cached stage
+    // can finish first and be picked as the build side instead, which also drops the
+    // doc partitioning every consumer below relies on. Above the threshold the join
+    // keeps AQE's size-based choice, so a vocabulary too big to broadcast still plans.
+    val dfreqFits = dfreq.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
     val weights = tf
       .withColumn("dl", sum(col("tf")).over(dlWin))
-      .join(broadcast(dfreq), "token")
+      .join(if (dfreqFits) broadcast(dfreq) else dfreq, "token")
       .crossJoin(broadcast(totals))
       .withColumn("rr", rr)
       .withColumn("w", roundPos(lit(1000000.0) * (tfPart * idfRaw)))

@@ -1,6 +1,7 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,27 +33,32 @@ import graft.model._
   * whole store.
   *
   * One base, one delta: a version is a BASE relation per log (the loaded relation, or
-  * the last fold) plus the rows written since, held on the driver as ONE local relation
-  * per log. Each write batch replaces the delta with `delta ++ its rows`, so a version
-  * never grows the plan by more than that one Union branch, and reading it re-runs none
-  * of the earlier batches' joins — the reference applies each write as a per-key upsert
-  * and never re-reads history (`SqlShard.scala:432-524`). A write that would pass
-  * [[EdgeStore.DeltaMax]] rows takes the compacting form instead: the log folds into a
-  * new materialized base (the memtable flush of an LSM tree). Every other derived store
-  * ([[asOf]], [[whereGraph]], [[restrictedTo]], [[repairWith]]) starts a new chain over
-  * its own logs.
+  * what a derived store was built over), an executor-side SEGMENT holding the rows
+  * flushed since, and a driver-held DELTA shown to Spark as ONE local relation. Each
+  * write batch replaces the delta with `delta ++ its rows`, so a version never adds a
+  * Union branch, and reading it re-runs none of the earlier batches' joins — the
+  * reference applies each write as a per-key upsert and never re-reads history
+  * (`SqlShard.scala:432-524`). A write that would pass [[EdgeStore.DeltaMax]] rows
+  * first FLUSHES the delta: segment and delta are merged into one checkpointed
+  * segment, unfolded, so no write is discarded and every cut stays answerable. A
+  * chain of batches that fit the delta is therefore never more than
+  * base ∪ segment ∪ delta. A write too big for the delta, and every other derived
+  * store ([[asOf]], [[whereGraph]], [[restrictedTo]], [[repairWith]]), starts a new
+  * chain over its own logs.
   *
   * @param compactionHorizon oldest instant this store can truthfully time-travel to.
   *   `None` = full write log (every cut answerable). Compaction
-  *   ([[EdgeStorage.compact]], `TestGraph.compactedStore`, the write path's fold)
-  *   discards superseded writes, so the compacted relation can only replay cuts at or
-  *   after the newest write that superseded a discarded one — [[asOf]] REJECTS older
-  *   cuts instead of silently returning a state that never existed.
+  *   ([[EdgeStorage.compact]], `TestGraph.compactedStore`, the write path's compacting
+  *   form) discards superseded writes, so the compacted relation can only replay cuts
+  *   at or after the newest write that superseded a discarded one — [[asOf]] REJECTS
+  *   older cuts instead of silently returning a state that never existed.
   */
 final class EdgeStore private (
     base: DataFrame,
     vertexBase: Option[DataFrame],
     val compactionHorizon: Option[Int],
+    segment: Option[DataFrame],
+    vertexSegment: Option[DataFrame],
     private val edgeDelta: Vector[Row],
     private val registerDelta: Vector[Row]
 ) {
@@ -60,24 +66,56 @@ final class EdgeStore private (
 
   /** A store over the given logs, with no delta. */
   def this(log: DataFrame, vertexLog: Option[DataFrame] = None, compactionHorizon: Option[Int] = None) =
-    this(log, vertexLog, compactionHorizon, Vector.empty, Vector.empty)
+    this(log, vertexLog, compactionHorizon, None, None, Vector.empty, Vector.empty)
 
-  /** The edge write log: the base, plus the delta's local relation once this version
+  private def spark: SparkSession = base.sparkSession
+
+  /** `base ∪ segment ∪ delta` over whichever of them exist; exactly the base while
+    * nothing was written to it.
+    */
+  private def chained(
+      base: Option[DataFrame], segment: Option[DataFrame], delta: Vector[Row], schema: StructType
+  ): Option[DataFrame] =
+    if (segment.isEmpty && delta.isEmpty) base
+    else (base.map(_.select(schema.fieldNames.map(col): _*)) ++ segment ++
+      Option.when(delta.nonEmpty)(localFrame(spark, delta, schema))).reduceOption(_ unionByName _)
+
+  /** The edge write log: the base, plus the segment and the delta once this chain
     * carries writes (a store with no writes keeps exactly its base plan).
     */
-  val log: DataFrame =
-    if (edgeDelta.isEmpty) base
-    else base.select(edgeCols: _*).unionByName(localFrame(base.sparkSession, edgeDelta, edgeLogSchema))
+  val log: DataFrame = chained(Some(base), segment, edgeDelta, edgeLogSchema).get
 
-  /** The vertex-register write log, base plus delta like [[log]]; `None` = no register
-    * was ever written.
+  /** The vertex-register write log, chained like [[log]]; `None` = no register was
+    * ever written.
     */
-  val vertexLog: Option[DataFrame] =
-    if (registerDelta.isEmpty) vertexBase
-    else {
-      val delta = localFrame(base.sparkSession, registerDelta, vertexLogSchema)
-      Some(vertexBase.fold(delta)(_.select(vertexLogSchema.fieldNames.map(col): _*).unionByName(delta)))
-    }
+  val vertexLog: Option[DataFrame] = chained(vertexBase, vertexSegment, registerDelta, vertexLogSchema)
+
+  /** Rows (edge and register writes together) the delta can still take. */
+  private def room: Int = DeltaMax - edgeDelta.size - registerDelta.size
+
+  /** This version with more rows in its delta. */
+  private def appended(edges: Seq[Row], registers: Seq[Row]): EdgeStore =
+    new EdgeStore(base, vertexBase, compactionHorizon, segment, vertexSegment,
+      edgeDelta ++ edges, registerDelta ++ registers)
+
+  /** The flush: each log's segment and delta merged into one checkpointed segment (one
+    * job per log whose delta holds rows), leaving an empty delta. Nothing is folded, so
+    * the horizon stays; copying the segment costs the rows written since the base,
+    * never the store.
+    */
+  private def flushed: EdgeStore = {
+    def merged(seg: Option[DataFrame], delta: Vector[Row], schema: StructType): Option[DataFrame] =
+      if (delta.isEmpty) seg else chained(None, seg, delta, schema).map(_.localCheckpoint(true))
+    new EdgeStore(base, vertexBase, compactionHorizon,
+      merged(segment, edgeDelta, edgeLogSchema), merged(vertexSegment, registerDelta, vertexLogSchema),
+      Vector.empty, Vector.empty)
+  }
+
+  /** A new chain over this version's logs with `newRows` appended lazily — the form of
+    * writes too big for the delta, whose rows are not collected.
+    */
+  private def extended(newRows: DataFrame, vertices: Option[DataFrame]): EdgeStore =
+    new EdgeStore(log.select(edgeCols: _*).unionByName(newRows), vertices, compactionHorizon)
 
   /** Current edge snapshot: per (graphId, sourceId, destinationId) the row with max
     * (updatedAt, statePriority, position) — reference LWW semantics `Edge.scala:61-68`
@@ -173,7 +211,7 @@ final class EdgeStore private (
     }
 
   private def vertexLogOrEmpty: DataFrame =
-    vertexLog.getOrElse(localFrame(log.sparkSession, Nil, vertexLogSchema))
+    vertexLog.getOrElse(localFrame(spark, Nil, vertexLogSchema))
 
   /** Current vertex-register snapshot: per (graphId, vertexId, direction) the LWW-max
     * (updatedAt, statePriority) register — the reference's metadata-state register
@@ -411,14 +449,10 @@ final class EdgeStore private (
     *
     * Scale shape — the write path touches only batch-scale data, like the reference's
     * per-key upserts (`SqlShard.scala:432-524`), never the whole store:
-    *  - ONE bounded driver round trip decides the path: the batch is collected with a
-    *    limit of one row more than the driver may take: the room left in the delta
-    *    (see the class doc), or `incrementalMax` when smaller (`-1` forces the
-    *    compacting form). A batch that comes back whole takes the incremental
-    *    path: its keys and register writes are read on the driver, and it runs on as a
-    *    local relation (materialized once; callers routinely derive ops from a snapshot
-    *    query, which would otherwise re-fold per consumer). A batch built on the
-    *    driver (`FlockService.execute`) costs no Spark job here.
+    *  - The batch is materialized once (eager local checkpoint, skipped for a batch
+    *    built on the driver, such as `FlockService.execute`'s; callers routinely derive
+    *    ops from a snapshot query, which would otherwise re-fold per consumer). One
+    *    collect, limited to [[EdgeStore.DeltaMax]] + 1 rows, then decides the path.
     *  - The pre-batch state the pipeline joins against is the LWW fold of the edge log
     *    [[restrictedTo]] the batch's keys (single-edge ops: the direction-normalized
     *    source; wildcard ops: the vertex on the op's side) — at 100 TB with
@@ -426,19 +460,25 @@ final class EdgeStore private (
     *    fold collapses only the touched keys' rows. The vertex log is not restricted:
     *    domination reads the register of each written edge's OTHER endpoint, which is
     *    not a batch key.
-    *  - The batch's edge rows are collected once and appended to the delta, its
-    *    registers likewise: the next version's log is still `base ∪ delta`, so reads
-    *    and later writes never re-run this batch's joins. A 10-row execute() writes
-    *    ~10 rows, not the store.
-    *  - A batch whose rows do not fit the delta (too many ops, or a wildcard fanning
-    *    out past the room) takes the compacting form: fold the full log once into a
-    *    materialized pre-batch state, return `snapshot ∪ newRows` with an empty delta
-    *    and the compaction horizon raised over what the fold discarded (sound because
-    *    lww is idempotent: lww(lww(L) ∪ R) = lww(L ∪ R)). It is the flush of the
-    *    delta: a bulk migration rewrites the store anyway, and its rows would not fit
-    *    on the driver.
+    *  - A batch that came back whole has its keys and register writes read on the
+    *    driver and runs on as a local relation; its edge rows are collected once and
+    *    appended to the delta, its registers likewise (the delta is flushed first when
+    *    the batch's ops alone pass its room). The next version's log is still
+    *    `base ∪ segment ∪ delta`, so reads and later writes never re-run this batch's
+    *    joins. A 10-row execute() writes ~10 rows, not the store.
+    *  - A batch bigger than the delta (or a wildcard fanning out past its room) has its
+    *    keys collected distinct, and its rows are appended to the log lazily as a new
+    *    chain: nothing folded, every cut still answerable, and the versions after it
+    *    re-run that one batch's batch-scale joins (materializing them made a 6000-op
+    *    execute 1.8x slower on a 4-core host, about what its next three reads saved).
+    *  - Batches with more than `incrementalMax` distinct keys (default
+    *    [[EdgeStore.IncrementalBatchMax]]; `-1` forces it) take the compacting form:
+    *    fold the full log once, return `snapshot ∪ newRows` as a new chain with the
+    *    compaction horizon raised over what the fold discarded (sound because lww is
+    *    idempotent: lww(lww(L) ∪ R) = lww(L ∪ R)) — a bulk migration touching most keys
+    *    rewrites the store anyway, and its key set would not fit on the driver.
     */
-  def applyOperations(ops: DataFrame, incrementalMax: Long = DeltaMax): EdgeStore =
+  def applyOperations(ops: DataFrame, incrementalMax: Long = IncrementalBatchMax): EdgeStore =
     applyOperationsWithDelta(ops, incrementalMax)._1
 
   /** [[applyOperations]] additionally returning the touched-vertex key set — the
@@ -449,68 +489,86 @@ final class EdgeStore private (
     */
   def applyOperationsWithDelta(
       ops: DataFrame,
-      incrementalMax: Long = DeltaMax
+      incrementalMax: Long = IncrementalBatchMax
   ): (EdgeStore, DataFrame) = {
-    val batch = conformed(withDirection(ops), opSchema)
-    // the batch rows the driver may take: within incrementalMax and the delta's room
-    val fits = math.max(-1L, math.min(incrementalMax, DeltaMax - edgeDelta.size - registerDelta.size))
-    val opRows = batch.limit(fits.toInt + 1).collect()
-    if (opRows.length > fits) compacting(batch.localCheckpoint(true))
-    else if (opRows.isEmpty) (this, localFrame(log.sparkSession, Nil, touchedSchema))
-    else incremental(opRows)
+    val batch = materialized(conformed(withDirection(ops), opSchema))
+    val opRows = batch.limit(DeltaMax + 1).collect()
+    val whole = opRows.length <= DeltaMax
+    // a batch bigger than the delta has its keys collected distinct, at most one more
+    // than incrementalMax
+    lazy val keys =
+      if (whole) opRows.toSeq.map(writeKey).distinct
+      else batch.map(writeKey)(keyEncoder).distinct()
+        .limit(math.min(incrementalMax, Int.MaxValue - 1L).toInt + 1).collect().toSeq
+    if (opRows.isEmpty) (this, localFrame(spark, Nil, touchedSchema))
+    else if (keys.size > incrementalMax) compacting(batch)
+    else if (!whole) keyed(batch, keys)
+    else (if (opRows.length > room) flushed else this).incremental(opRows, keys)
   }
 
-  /** The incremental path over a non-empty batch already on the driver (`opSchema` rows). */
-  private def incremental(opRows: Array[Row]): (EdgeStore, DataFrame) = {
-    val spark = log.sparkSession
+  /** The incremental path over a batch already on the driver (`opSchema` rows) whose
+    * ops fit the delta's room.
+    */
+  private def incremental(opRows: Array[Row], keys: Seq[(Int, Long, Boolean)]): (EdgeStore, DataFrame) = {
     val batch = localFrame(spark, opRows, opSchema)
-    val isSingle = (r: Row) => !r.isNullAt(2)
     // 1. vertex-register writes from wildcard ops, visible to this batch's edge writes
-    val newRegisters = opRows.filterNot(isSingle)
-      .map(r => Row(r.getInt(0), r.getLong(1), r.getBoolean(6), r.getInt(3), r.getInt(4))).toVector
-    val next = new EdgeStore(base, vertexBase, compactionHorizon, edgeDelta, registerDelta ++ newRegisters)
-    // the edge-log keys the pipeline reads: a single-edge op's direction-normalized
-    // source (forward), a wildcard op's vertex on the op's side
-    val keys = opRows.toSeq.map { r =>
-      val normalizedBackward = isSingle(r) && !r.getBoolean(6)
-      (r.getInt(0), r.getLong(if (normalizedBackward) 2 else 1), isSingle(r) || r.getBoolean(6))
-    }.distinct
+    val newRegisters = opRows.filter(_.isNullAt(2))
+      .map(r => Row(r.getInt(0), r.getLong(1), r.getBoolean(6), r.getInt(3), r.getInt(4))).toSeq
+    val next = appended(Nil, newRegisters)
     // three joins consume the pre-batch state with differing pushed projections
     // (defeating exchange reuse) — materialize it once; it is batch-scale
     val snap = lwwMerge(restrictedTo(keys).log).localCheckpoint(true)
     val newRows = writeRows(batch, snap, next.vertexLogOrEmpty)
-
-    // a wildcard can fan out past the delta's room: then the batch is compacted instead
-    val room = DeltaMax - edgeDelta.size - next.registerDelta.size
-    val rows = conformed(newRows, edgeLogSchema).limit(room + 1).collect()
-    if (rows.length > room) compacting(batch)
+    val rows = conformed(newRows, edgeLogSchema).limit(next.room + 1).collect()
+    if (rows.length > next.room) // a wildcard fanned out past the room
+      (next.extended(newRows, next.vertexLog),
+        touchedOf(newRows, localFrame(spark, newRegisters, vertexLogSchema)))
     else {
-      val touched = (rows.toSeq.map(r => Row(r.getInt(0), r.getLong(1))) ++
-        newRegisters.map(r => Row(r.getInt(0), r.getLong(1)))).distinct
-      (new EdgeStore(base, vertexBase, compactionHorizon, edgeDelta ++ rows, next.registerDelta),
-        localFrame(spark, touched, touchedSchema))
+      val touched = (rows.toSeq ++ newRegisters).map(r => Row(r.getInt(0), r.getLong(1))).distinct
+      (next.appended(rows.toSeq, Nil), localFrame(spark, touched, touchedSchema))
     }
   }
 
-  /** The compacting form, for a batch whose rows do not fit the driver-held delta: the
+  /** A batch bigger than the delta: key-restricted fold, its rows and registers
+    * appended lazily as a new chain.
+    */
+  private def keyed(batch: DataFrame, keys: Seq[(Int, Long, Boolean)]): (EdgeStore, DataFrame) = {
+    val newRegisters = registersOf(batch)
+    val vertices = vertexLogOrEmpty.unionByName(newRegisters)
+    val snap = lwwMerge(restrictedTo(keys).log).localCheckpoint(true)
+    val newRows = writeRows(batch, snap, vertices)
+    (extended(newRows, Some(vertices)), touchedOf(newRows, newRegisters))
+  }
+
+  /** The compacting form, for a batch whose key set is too big for the driver: the
     * whole log folded once into a materialized pre-batch state, and the batch's rows
-    * appended to it lazily. It is a new chain with an empty delta. The fold discards
-    * superseded writes, so the horizon rises over them ([[EdgeStorage.horizonOf]], as
-    * [[EdgeStorage.compact]] does).
+    * appended to it lazily, a new chain. The fold discards superseded writes, so the
+    * horizon rises over them as [[EdgeStorage.compact]]'s does: the newest write of a
+    * key that had more than one, counted in the fold's own aggregation.
     */
   private def compacting(batch: DataFrame): (EdgeStore, DataFrame) = {
-    val newRegisters = batch.filter(col("destination_id").isNull).select(
+    val newRegisters = registersOf(batch)
+    val vertices = vertexLogOrEmpty.unionByName(newRegisters)
+    val folded = lwwFold(log, "writes" -> count(lit(1))).localCheckpoint(true)
+    val h = folded.filter(col("writes") > 1L).agg(max(col("updated_at"))).collect()(0)
+    val horizon = (compactionHorizon.toSeq ++ Option.unless(h.isNullAt(0))(h.getInt(0)))
+      .reduceOption(_ max _)
+    val snap = folded.select(edgeCols: _*)
+    val newRows = writeRows(batch, snap, vertices)
+    (new EdgeStore(snap.unionByName(newRows), Some(vertices), horizon), touchedOf(newRows, newRegisters))
+  }
+
+  /** A batch's vertex-register writes: one per wildcard op. */
+  private def registersOf(batch: DataFrame): DataFrame =
+    batch.filter(col("destination_id").isNull).select(
       col("graph_id"), col("source_id").as("vertex_id"), col("is_forward"),
       col("state"), col("updated_at"))
-    val vertices = vertexLogOrEmpty.unionByName(newRegisters)
-    val snap = lwwMerge(log).localCheckpoint(true)
-    val horizon = (compactionHorizon.toSeq ++ EdgeStorage.horizonOf(log).toSeq).reduceOption(_ max _)
-    val newRows = writeRows(batch, snap, vertices)
-    val touched = newRows.select(col("graph_id"), col("source_id"))
+
+  /** The touched-vertex keys of edge rows and register writes, as a lazy relation. */
+  private def touchedOf(newRows: DataFrame, newRegisters: DataFrame): DataFrame =
+    newRows.select(col("graph_id"), col("source_id"))
       .unionByName(newRegisters.select(col("graph_id"), col("vertex_id").as("source_id")))
       .distinct()
-    (new EdgeStore(snap.unionByName(newRows), Some(vertices), horizon), touched)
-  }
 
   /** Incremental metadata maintenance — the batch restatement of the reference's A2
     * count-delta path (`SqlShard.scala:470-524`): given the PRE-write metadata table
@@ -624,16 +682,14 @@ final class EdgeStore private (
     * the path copy/repair uses to move vertex state between replicas (the Multi job's
     * register-plus-fanout is the wildcard branch of [[applyOperations]]). Columns:
     * graph_id, vertex_id, is_forward, state, updated_at. The registers join the
-    * driver-held delta like an execute batch's while they fit in it.
+    * driver-held delta like an execute batch's while they fit in its room, and are
+    * appended lazily as a new chain otherwise.
     */
   def writeVertexStates(registers: DataFrame): EdgeStore = {
-    val room = DeltaMax - edgeDelta.size - registerDelta.size
     val regs = conformed(registers, vertexLogSchema)
     val rows = regs.limit(room + 1).collect()
-    if (rows.length <= room)
-      new EdgeStore(base, vertexBase, compactionHorizon, edgeDelta, registerDelta ++ rows)
-    else // too many for the delta: they start a new vertex-log chain
-      new EdgeStore(base, Some(vertexLogOrEmpty.unionByName(regs)), compactionHorizon, edgeDelta, Vector.empty)
+    if (rows.length <= room) appended(Nil, rows.toSeq)
+    else new EdgeStore(log, Some(vertexLogOrEmpty.unionByName(regs)), compactionHorizon)
   }
 
   /** Reciprocal edges: every edge (s, d) in the given states whose reverse (d, s) also
@@ -703,13 +759,20 @@ object EdgeStore {
     */
   val WhereInPredicateMax: Int = 1000
 
+  /** Largest number of distinct keys an op batch may have to take the key-restricted
+    * write path; bigger batches fall back to the compacting full-fold form. ~1M
+    * distinct touched keys is a ~12 MB broadcast — comfortably inside executor
+    * broadcast budgets.
+    */
+  val IncrementalBatchMax: Long = 1000000L
+
   /** Most rows (edge and register writes together) a version holds on the driver as its
-    * delta; a write that would pass it is folded with the log into a new base instead.
+    * delta; a write that would pass it flushes the delta into the segment first.
     * Planning a read grows with the delta (Catalyst evaluates pushed filters over the
     * local rows): on a 4-core host a point read over a 100k-row parquet base planned in
     * 32 ms with no delta, 33 ms at 1k rows, 44 ms at 10k and 97 ms at 50k. 5000 rows
     * keeps a full delta within 1.25x of the empty one's plan time and ~0.5 MB of driver
-    * heap, while a 10-op batch flushes (a full-store fold) only once per ~500 batches.
+    * heap; a flush is one checkpoint job over the rows written since the base.
     */
   private[graft] val DeltaMax: Int = 5000
 
@@ -748,6 +811,23 @@ object EdgeStore {
   private def conformed(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
 
+  /** The edge-log key a write op's pipeline reads: a single-edge op's
+    * direction-normalized source (forward), a wildcard op's vertex on the op's side.
+    */
+  private val writeKey: Row => (Int, Long, Boolean) = { r =>
+    val single = !r.isNullAt(2)
+    (r.getInt(0), r.getLong(if (single && !r.getBoolean(6)) 2 else 1), single || r.getBoolean(6))
+  }
+
+  private val keyEncoder: Encoder[(Int, Long, Boolean)] =
+    Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaBoolean)
+
+  /** `df` materialized once: as it is when its plan is already rows on the driver,
+    * eagerly local-checkpointed otherwise.
+    */
+  private def materialized(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df else df.localCheckpoint(true)
+
   /** Driver rows as a local relation: planned and filtered on the driver, no stale
     * constraints from an earlier plan, and it takes `updated_at` cuts like any log.
     */
@@ -776,22 +856,30 @@ object EdgeStore {
     * verified identical output, and the plan shape a 100 TB log fold needs
     * (PlanSpec pins it).
     */
-  def lwwMerge(writes: DataFrame): DataFrame =
+  def lwwMerge(writes: DataFrame): DataFrame = lwwFold(writes)
+
+  /** [[lwwMerge]] with `extra` named per-key aggregates in the same aggregation,
+    * appended as columns after the winner's.
+    */
+  private def lwwFold(writes: DataFrame, extra: (String, Column)*): DataFrame =
     writes
       .groupBy(col("graph_id"), col("source_id"), col("destination_id"))
       .agg(
         org.apache.spark.sql.graft.LwwWinner
           .column(col("position"), col("updated_at"), col("count"), col("state"))
-          .as("w")
+          .as("w"),
+        extra.map { case (name, agg) => agg.as(name) }: _*
       )
       .select(
-        col("graph_id"),
-        col("source_id"),
-        col("destination_id"),
-        col("w.position").as("position"),
-        col("w.updated_at").as("updated_at"),
-        col("w.count").as("count"),
-        col("w.state").as("state")
+        Seq(
+          col("graph_id"),
+          col("source_id"),
+          col("destination_id"),
+          col("w.position").as("position"),
+          col("w.updated_at").as("updated_at"),
+          col("w.count").as("count"),
+          col("w.state").as("state")
+        ) ++ extra.map(e => col(e._1)): _*
       )
 
   /** LWW over the vertex-register log: winner = max (updatedAt, statePriority) — identical

@@ -48,11 +48,12 @@ final class StreamingEdgeIngest(initial: EdgeStore, compactEvery: Int = 8) {
     * stream: columns graph_id, source_id, destination_id (null = wildcard), state,
     * updated_at, position, optional is_forward). Each micro-batch runs the full write
     * semantics — vertex-register writes, direction normalization, W2 state domination,
-    * wildcard fanout — via `EdgeStore.applyOperations`. It compacts nothing per batch:
-    * each micro-batch's rows join the store's one driver-held delta, so the plan stays
-    * one base plus one delta however many batches arrive, and the delta flushes into a
-    * folded base when it reaches `EdgeStore.DeltaMax` rows. That flush is this path's
-    * compaction cadence; `compactEvery` does not apply to it.
+    * wildcard fanout — via `EdgeStore.applyOperations`. It compacts nothing: each
+    * micro-batch's rows join the store's driver-held delta, and a batch that would pass
+    * `EdgeStore.DeltaMax` rows first flushes the delta, unfolded, into the store's one
+    * checkpointed segment. The plan stays base ∪ segment ∪ delta however many batches
+    * arrive, and every cut stays answerable; `compactEvery` does not apply here, and
+    * folding the log is `EdgeStorage.compact`'s job.
     */
   def opsWriter(ops: DataFrame): DataStreamWriter[Row] =
     ops.writeStream

@@ -184,16 +184,17 @@ class FlockServiceSpec extends SparkSpec {
     assert(readsOf(chain, programs :+ backward) == readsOf(oneBatch, programs :+ backward))
   }
 
-  test("a write that would pass the delta cap compacts the chain and raises the horizon") {
+  test("writes past the delta cap fold nothing: bounded chains, every cut answerable") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val cap = EdgeStore.DeltaMax
-    // (alice,bob) written twice in the base; carl has half a cap of edges to fan out over
+    // (alice,bob) written twice in the base, so a fold would raise the horizon to 300;
+    // carl has half a cap of edges to fan out over
     val base = storeOf(
       Seq(edge(alice, bob, 1, at = 100), edge(alice, bob, 1, at = 300, state = State.Removed)) ++
         (1L to cap / 2).map(d => edge(carl, 1000L + d, d, at = 50)): _*)
     // single-edge adds on fresh keys (no register on either end: each add is its own row)
-    def bulk(b: Int) = spark.range(cap / 3 + 1).select(
+    def bulk(b: Int, n: Int = cap / 3 + 1) = spark.range(n).select(
       lit(FOLLOWS).as("graph_id"), (lit(100000L * b) + col("id")).as("source_id"),
       lit(7L).as("destination_id"), lit(State.Normal).as("state"),
       (lit(2000 * b) + col("id") % 1000).cast("int").as("updated_at"), col("id").as("position"),
@@ -206,24 +207,29 @@ class FlockServiceSpec extends SparkSpec {
       Seq(TermOp(QueryTerm(carl, FOLLOWS)), TermOp(QueryTerm(darcy, FOLLOWS)), UnionOp),
       Seq(TermOp(QueryTerm(7L, FOLLOWS, isForward = false)),
         TermOp(QueryTerm(earl, FOLLOWS, isForward = false)), UnionOp))
-    def assertCompacted(after: EdgeStore, raw: EdgeStore): Unit = {
-      assert(after.compactionHorizon.contains(300), "raised to the newest write of a folded key")
+    // `after` against `raw`, the same writes as plain logs: nothing folded, and the same
+    // answers at every cut, 200 included
+    def assertUnfolded(after: EdgeStore, raw: EdgeStore): Unit = {
+      assert(after.compactionHorizon.isEmpty, "nothing folded")
       assert(readsOf(after, programs) == readsOf(raw, programs))
-      val err = intercept[IllegalArgumentException] { after.asOf(299) }
-      assert(err.getMessage.contains("compaction horizon"), err.getMessage)
-      for (ts <- Seq(300, 4500, 9000))
+      for (ts <- Seq(200, 300, 4500, 9000, 20000))
         assert(after.asOf(ts).snapshot.collect().toSet == raw.asOf(ts).snapshot.collect().toSet,
           s"asOf($ts)")
     }
+    // a write too big for the delta starts a new chain, whose versions add no branch
+    def assertNewChain(after: EdgeStore): Unit = {
+      val next = new FlockService(after).execute(Seq(add(frank, alice, 9100)))
+      val later = next.execute(Seq(add(frank, bob, 9101)))
+      assert(logBranches(later.store.log) == logBranches(next.store.log))
+    }
 
-    // a wildcard whose fanout passes the delta's room; the truth is pre's raw logs plus
-    // the batch's rows
+    // a wildcard whose fanout passes the delta's room: its rows start a new chain
     val wildAt = 9000
     val wild = Seq(WriteOp(FOLLOWS, carl, None, State.Archived, wildAt), add(darcy, earl, 9001))
     val fanout = (1L to cap / 2).map(d => (FOLLOWS, carl, 1000L + d, d, wildAt, 0, State.Archived)) :+
       ((FOLLOWS, darcy, earl, 9001L * 1000, 9001, 0, State.Normal))
     val afterWild = pre.execute(wild).store
-    assertCompacted(afterWild, new EdgeStore(
+    assertUnfolded(afterWild, new EdgeStore(
       pre.store.log.unionByName(fanout.toDF(EdgeStore.edgeColNames: _*)),
       Some(Seq((FOLLOWS, carl, true, State.Archived, wildAt))
         .toDF(EdgeStore.vertexLogSchema.fieldNames.toSeq: _*))))
@@ -231,14 +237,21 @@ class FlockServiceSpec extends SparkSpec {
       wild.toDF("graph_id", "source_id", "destination_id", "state", "updated_at", "position",
         "is_forward")))
     assert(readsOf(oneBatch, programs) == readsOf(afterWild, programs))
-    // the compacted version starts a new chain: its versions again add no branch
-    val next = new FlockService(afterWild).execute(Seq(add(frank, alice, 9100)))
-    val later = next.execute(Seq(add(frank, bob, 9101)))
-    assert(logBranches(later.store.log) == logBranches(next.store.log))
+    assertNewChain(afterWild)
 
-    // a batch with more ops than the delta's room
-    assertCompacted(pre.executeDF(bulk(3)).store,
-      new EdgeStore(pre.store.log.unionByName(rowsOf(bulk(3))), pre.store.vertexLog))
+    // a chain of batches with more ops than the room crosses the cap again and again
+    val chain = (3 to 8).scanLeft((pre, pre.store.log)) { case ((svc, raw), b) =>
+      (svc.executeDF(bulk(b)), raw.unionByName(rowsOf(bulk(b))))
+    }
+    chain.foreach { case (svc, _) => assert(logBranches(svc.store.log) <= 3, "base + segment + delta") }
+    val (last, lastRaw) = chain.last
+    assertUnfolded(last.store, new EdgeStore(lastRaw, None))
+
+    // a batch bigger than the whole delta starts a new chain too
+    val big = bulk(9, cap + 1)
+    val afterBig = pre.executeDF(big).store
+    assertUnfolded(afterBig, new EdgeStore(pre.store.log.unionByName(rowsOf(big)), None))
+    assertNewChain(afterBig)
   }
 
   /** The metadata rule restated in plain Scala over a store's raw logs, per

@@ -449,6 +449,26 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"posting/statistics joins must broadcast here:\n$p")
   }
 
+  test("hybrid lexical side: a vocabulary over the broadcast threshold is not forced into a broadcast") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    def topK() = {
+      val (df, tf) = graft.pipeline.Retrieval.lexicalTopKPlan(
+        docs.filter(col("doc_id") % 50 === 0), docs, "doc_id", "text", k = 10)
+      val rows = df.collect().toSet
+      tf.unpersist(blocking = false)
+      (rows, df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
+    }
+    val (want, _) = topK()
+    // a 1-byte threshold makes every vocabulary "too big": no hint, no broadcast of
+    // dfreq by size, the token join sort-merges, and the answer is unchanged
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val (got, p) = try topK() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(p.contains("SortMergeJoin"), s"an over-threshold dfreq must not be broadcast:\n$p")
+    assert(got == want)
+  }
+
   test("hybrid lexical side, unbounded query batch: query pairs shuffle-join, never broadcast") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // threshold 0 = every batch counts as unbounded: the per-token query-id sets
